@@ -37,9 +37,8 @@ import org.apache.spark.sql.SparkSession
   * defend when the whole window is slow (a 16.9 s full-suite reading
   * for dedup_cosine_components re-ran at 3.3 s standalone minutes
   * later, with identical code and heap). Cross-round comparisons
-  * should therefore bisect suspicious per-query jumps with
-  * [[BenchOne]] (same isolation sweep, standalone JVM) before
-  * treating them as regressions.
+  * should therefore re-time suspicious per-query jumps in a fresh
+  * JVM before treating them as regressions.
   */
 object Bench {
 
@@ -56,8 +55,8 @@ object Bench {
     * CPU availability, so a round-over-round inflation of the canary
     * is host noise, not a code regression — per-query times are also
     * reported normalized (raw / mean canary), making cross-round
-    * totals comparable without a standalone BenchOne bisect (the r6
-    * artifact inflated 1.36x uniformly and needed manual adjudication).
+    * totals comparable without a standalone re-run (the r6 artifact
+    * inflated 1.36x uniformly and needed manual adjudication).
     */
   def canary(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{bit_xor, col, xxhash64}

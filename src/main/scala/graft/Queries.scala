@@ -156,7 +156,7 @@ object Queries {
   val upsertMerge: Q = (s, dir) => {
     val incoming = Normalize.uppercase(incomingCustomers(s, dir),
       Seq("c_name", "c_mktsegment"))
-    Merge.upsert(t(s, dir, "customer"), incoming, "c_custkey")
+    Merge.replaceByKey(t(s, dir, "customer"), incoming, "c_custkey")
   }
 
   /** One-to-many refresh merge (J4+K3 semantics): lineitems of touched
@@ -174,11 +174,7 @@ object Queries {
       .join(touchedOrders.withColumnRenamed("o_orderkey", "l_orderkey"),
         Seq("l_orderkey"), "left_semi")
       .withColumn("l_quantity", col("l_quantity") * 2)
-    Merge.refresh(
-      li,
-      incoming,
-      "l_orderkey",
-    )
+    Merge.replaceByKey(li, incoming, "l_orderkey")
   }
 
   /** F1/P8 — per-table uppercase normalization (null-safe, string-only). */
@@ -745,7 +741,7 @@ object Queries {
     * Both directions come from ONE explode over the distinct pair
     * set, not a self-union: Catalyst shares no subtrees, so the union
     * form put the orders⋈lineitem join + distinct into the plan twice
-    * per consumer of the edge table (round-15 JobProbe: graph_hits
+    * per consumer of the edge table (round 15: graph_hits
     * carried 64 MB of shuffle for a 1,600-node graph — most of it the
     * duplicated fact-table subtree under the edge persist's fill
     * job). Row set identical, order immaterial to every consumer
@@ -832,25 +828,9 @@ object Queries {
       .otherwise(lit("supplier")).as("kind"),
       expr("node div 2").as("id")) ++ rest
 
-  /** Fixpoint certificates memoized as a BYPRODUCT of
-    * `graph_pagerank` / `graph_hits` (which compute them from the
-    * SAME trajectory via the `*WithReport` entry points — the suite
-    * never runs a PageRank or HITS trajectory twice). Only 4
-    * driver-side SCALARS per (fixture dir, op) are memoized — never
-    * DataFrames, whose checkpoint blocks Verify/Bench free between
-    * queries. Values are deterministic functions of the fixture, so
-    * a stale entry cannot exist.
-    */
-  private val fixpointCerts = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, String), (Long, Long, Boolean)]()
-
-  /** The graph loop parameters, single-sourced: each parent query
-    * passes these constants to its operator AND into the memo key (as
-    * [[certParams]] strings), and the certificate queries look up by
-    * the same constants — a future drift between a parent's iteration
-    * count and the certificate's cold-path recompute can't silently
-    * serve a stale scalar; the key simply misses and the cold path
-    * computes the right value.
+  /** The graph loop parameters, single-sourced: each parent query and
+    * its convergence certificate (`graph_fixpoint_delta`,
+    * `graph_convergence`) run the operator with the same constants.
     */
   private val PrIters = 3
   private val HitsIters = 2
@@ -858,41 +838,10 @@ object Queries {
   private val KcoreRounds = 3
   private val LpaRounds = 3
   private val BfsHops = 4
-  private def certParams(op: String): String = op match {
-    case "pagerank" => s"iters=$PrIters"
-    case "hits" => s"iters=$HitsIters"
-    case "kcore" => s"k=$KcoreK;rounds=$KcoreRounds"
-    case "labelprop" => s"rounds=$LpaRounds"
-    case "bfs" => s"hops=$BfsHops"
-  }
 
-  /** Collect the 1-row literal-only certificate frame into the memo
-    * (no cluster job — the changed-count is already a driver scalar).
-    */
-  private def stashCert(dir: String, report: DataFrame): Unit = {
-    val r = report.head()
-    fixpointCerts.put((dir, r.getString(0), certParams(r.getString(0))),
-      (r.getLong(1), r.getLong(2), r.getBoolean(3)))
-  }
-
-  /** Memoized certificate row: the parent query's stash when present,
-    * else compute `report` directly (standalone runs stay correct in
-    * any order).
-    */
-  private def memoCert(dir: String, op: String,
-      report: => DataFrame): (String, Long, Long, Boolean) = {
-    val key = (dir, op, certParams(op))
-    if (!fixpointCerts.containsKey(key)) stashCert(dir, report)
-    val c = fixpointCerts.get(key)
-    (op, c._1, c._2, c._3)
-  }
-
-  val graphPagerank: Q = (s, dir) => {
-    val (ranks, report) = graft.operators.Graphs
-      .pageRankWithReport(tradeEdges(s, dir), iters = PrIters)
-    stashCert(dir, report)
-    ranks.select(decodeNode(col("r").as("rank")): _*)
-  }
+  val graphPagerank: Q = (s, dir) =>
+    graft.operators.Graphs.pageRank(tradeEdges(s, dir), iters = PrIters)
+      .select(decodeNode(col("r").as("rank")): _*)
 
   /** Extension — PERSONALIZED PageRank from every 50th customer
     * ([[graft.operators.Graphs.personalizedPageRank]]): the walk
@@ -917,12 +866,9 @@ object Queries {
     * keeps every score an exact integer — see
     * [[graft.operators.Graphs.hits]].
     */
-  val graphHits: Q = (s, dir) => {
-    val (scores, report) = graft.operators.Graphs
-      .hitsWithReport(tradeEdges(s, dir), iters = HitsIters)
-    stashCert(dir, report)
-    scores.select(decodeNode(col("hub"), col("auth")): _*)
-  }
+  val graphHits: Q = (s, dir) =>
+    graft.operators.Graphs.hits(tradeEdges(s, dir), iters = HitsIters)
+      .select(decodeNode(col("hub"), col("auth")): _*)
 
   /** Extension — fixpoint-delta certificates for the two
     * fixed-iteration graph ops ([[graft.operators.Graphs.pageRankReport]] /
@@ -932,24 +878,13 @@ object Queries {
     * count of nodes whose state changed in the final round certifies
     * EXACT convergence (further rounds provably identical).
     *
-    * The certificates are the SAME scalars `graph_pagerank` /
-    * `graph_hits` already produced from their own trajectories
-    * (registration order runs the parents first), so in-suite this
-    * query is a literal-only frame — zero recompute (round-10 shape:
-    * re-ran both trajectories end-to-end, 10.4 s, the suite's
-    * slowest query). Standalone (memo cold) each missing certificate
-    * is computed directly over one shared materialized edge table.
+    * Both certificates are computed from the data at `dir` over one
+    * shared materialized edge table, whatever ran before.
     */
   val graphFixpointDelta: Q = (s, dir) => {
-    // touched only when a certificate is missing (standalone runs)
-    lazy val edges = tradeEdges(s, dir).materialize()
-    val rows = Seq(
-      memoCert(dir, "pagerank",
-        graft.operators.Graphs.pageRankReport(edges, iters = PrIters)),
-      memoCert(dir, "hits",
-        graft.operators.Graphs.hitsReport(edges, iters = HitsIters)))
-    import s.implicits._
-    rows.toDF("op", "rounds", "changed_last_round", "converged")
+    val edges = tradeEdges(s, dir).materialize()
+    graft.operators.Graphs.pageRankReport(edges, iters = PrIters)
+      .union(graft.operators.Graphs.hitsReport(edges, iters = HitsIters))
   }
 
   /** Extension — bounded BFS: exact hop distance from customer 0 to
@@ -958,10 +893,9 @@ object Queries {
     */
   val graphKhop: Q = (s, dir) => {
     val src = s.range(1).select(lit(0L).as("node"))
-    val (dist, report) = graft.operators.Graphs
-      .kHopWithReport(tradeEdges(s, dir), src, maxHops = BfsHops)
-    stashCert(dir, report)
-    dist.select(decodeNode(col("dist")): _*)
+    graft.operators.Graphs
+      .kHopDistances(tradeEdges(s, dir), src, maxHops = BfsHops)
+      .select(decodeNode(col("dist")): _*)
   }
 
   /** Extension — semi-supervised label propagation over the repeat
@@ -972,38 +906,42 @@ object Queries {
     * classifier bootstrap — label the sparse gold set, propagate to
     * the rest. See [[graft.operators.Graphs.labelPropagation]].
     */
-  val graphLabelprop: Q = (s, dir) => {
-    val und = graft.operators.Cooccur.pairCounts(
+  val graphLabelprop: Q = (s, dir) =>
+    graft.operators.Graphs
+      .labelPropagation(coPurchaseEdges(s, dir), brandSeeds(s, dir),
+        rounds = LpaRounds)
+      .withColumnRenamed("node", "part")
+
+  /** Parts bought together in at least two orders (basket pairs capped
+    * at 32 parts per order), one row per unordered pair.
+    */
+  private def coPurchasePairs(s: SparkSession, dir: String): DataFrame =
+    graft.operators.Cooccur.pairCounts(
         t(s, dir, "lineitem"), col("l_orderkey"), col("l_partkey"), cap = 32)
       .filter(col("n") >= 2).select("item_a", "item_b")
-    // one-pass symmetric orientation (see [[bothDirections]]) — the
-    // union form carried the basket pair-count subplan twice
-    val edges = bothDirections(und, "item_a", "item_b")
-    val seeds = t(s, dir, "part")
+
+  /** [[coPurchasePairs]] in both directions, by the one-pass symmetric
+    * orientation (see [[bothDirections]]) — the union form carried the
+    * basket pair-count subplan twice.
+    */
+  private def coPurchaseEdges(s: SparkSession, dir: String): DataFrame =
+    bothDirections(coPurchasePairs(s, dir), "item_a", "item_b")
+
+  /** Label-propagation seeds: every 10th part, labeled with its brand. */
+  private def brandSeeds(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "part")
       .filter(col("p_partkey") % 10 === 0)
       .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-    val (labels, report) = graft.operators.Graphs
-      .labelPropagationWithReport(edges, seeds, rounds = LpaRounds)
-    stashCert(dir, report)
-    labels.withColumnRenamed("node", "part")
-  }
 
   /** Extension — 3-core of the co-purchase graph by 3 peeling rounds:
     * the dense backbone (every surviving part co-bought with ≥ 3
     * other survivors), the graph-robustness complement of the
     * community queries (see [[graft.operators.Graphs.kCore]]).
     */
-  val graphKcore: Q = (s, dir) => {
-    val und = graft.operators.Cooccur.pairCounts(
-        t(s, dir, "lineitem"), col("l_orderkey"), col("l_partkey"), cap = 32)
-      .filter(col("n") >= 2).select("item_a", "item_b")
-    // one-pass symmetric orientation (see [[bothDirections]])
-    val edges = bothDirections(und, "item_a", "item_b")
-    val (surv, report) = graft.operators.Graphs
-      .kCoreWithReport(edges, k = KcoreK, rounds = KcoreRounds)
-    stashCert(dir, report)
-    surv.withColumnRenamed("node", "part")
-  }
+  val graphKcore: Q = (s, dir) =>
+    graft.operators.Graphs
+      .kCore(coPurchaseEdges(s, dir), k = KcoreK, rounds = KcoreRounds)
+      .withColumnRenamed("node", "part")
 
   /** Extension — convergence certificates for the three bounded-round
     * iterative graph operators on their own fixture graphs (the gap
@@ -1013,43 +951,19 @@ object Queries {
     * kCore's edges removed in the final peel, LPA's labels changed in
     * the final vote, BFS's frontier size at the horizon. Rounds stay
     * fixed (oracles unchanged); each certificate is one extra count
-    * over states the loop already checkpointed.
+    * over states the loop already checkpointed. All three are
+    * computed from the data at `dir`, whatever ran before; the
+    * co-purchase edges feeding both kCore and LPA are materialized
+    * once (Catalyst shares no subtrees).
     */
   val graphConvergence: Q = (s, dir) => {
-    // The three certificates are the SAME scalars graph_kcore /
-    // graph_labelprop / graph_khop already stashed from their own
-    // trajectories (registration order runs the parents first — the
-    // graph_fixpoint_delta suite-dedup pattern, which replaced this
-    // query's round-10 concurrent-futures recompute of all three
-    // trajectories). Standalone (memo cold) each missing certificate
-    // is computed directly; the co-purchase derivation feeding BOTH
-    // cold kcore and LPA is materialized once (no-subtree-sharing).
-    lazy val coEdges = {
-      val und = graft.operators.Cooccur.pairCounts(
-          t(s, dir, "lineitem"), col("l_orderkey"), col("l_partkey"), cap = 32)
-        .filter(col("n") >= 2).select("item_a", "item_b")
-      // one-pass symmetric orientation (see [[bothDirections]]) — the
-      // union form ran the pair-count subplan twice inside the
-      // checkpoint's fill job
-      bothDirections(und, "item_a", "item_b").materialize()
-    }
-    val rows = Seq(
-      memoCert(dir, "kcore",
-        graft.operators.Graphs.kCoreReport(coEdges, k = KcoreK, rounds = KcoreRounds)),
-      memoCert(dir, "labelprop", {
-        val seeds = t(s, dir, "part")
-          .filter(col("p_partkey") % 10 === 0)
-          .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-        graft.operators.Graphs.labelPropagationReport(coEdges, seeds,
-          rounds = LpaRounds)
-      }),
-      memoCert(dir, "bfs", {
-        val src = s.range(1).select(lit(0L).as("node"))
-        graft.operators.Graphs.kHopReport(tradeEdges(s, dir), src,
-          maxHops = BfsHops)
-      }))
-    import s.implicits._
-    rows.toDF("op", "rounds", "changed_last_round", "converged")
+    val coEdges = coPurchaseEdges(s, dir).materialize()
+    val src = s.range(1).select(lit(0L).as("node"))
+    graft.operators.Graphs.kCoreReport(coEdges, k = KcoreK, rounds = KcoreRounds)
+      .union(graft.operators.Graphs.labelPropagationReport(coEdges,
+        brandSeeds(s, dir), rounds = LpaRounds))
+      .union(graft.operators.Graphs.kHopReport(tradeEdges(s, dir), src,
+        maxHops = BfsHops))
   }
 
   /** Extension — modularity of the propagated-label partition over
@@ -1062,16 +976,10 @@ object Queries {
     // the edge list feeds BOTH the propagation (via the symmetric
     // union) and the modularity score; checkpoint so the basket
     // pair-count subplan runs once, not once per consumer
-    val und = graft.operators.Cooccur.pairCounts(
-        t(s, dir, "lineitem"), col("l_orderkey"), col("l_partkey"), cap = 32)
-      .filter(col("n") >= 2).select("item_a", "item_b")
-      .materialize()
+    val und = coPurchasePairs(s, dir).materialize()
     val edges = bothDirections(und, "item_a", "item_b")
-    val seeds = t(s, dir, "part")
-      .filter(col("p_partkey") % 10 === 0)
-      .select(col("p_partkey").as("node"), col("p_brand").as("label"))
-    val labels = graft.operators.Graphs.labelPropagation(edges, seeds,
-      rounds = 3).select("node", "label")
+    val labels = graft.operators.Graphs.labelPropagation(edges,
+      brandSeeds(s, dir), rounds = 3).select("node", "label")
     graft.operators.Graphs.modularity(und, labels)
   }
 

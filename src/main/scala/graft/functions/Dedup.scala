@@ -1437,33 +1437,6 @@ object Dedup {
         sum(col("__covered")).as("n_removed_tokens"))
   }
 
-  /** The pre-sweep join formulation of [[removeRepeatedSpans]] — kept
-    * as the equivalence-test baseline ONLY (DedupSimilaritySpec checks
-    * the sweep against it, including a pathological many-span doc). Do
-    * not use at scale: a doc's tokens join to ALL of its spans before
-    * re-grouping, quadratic inside one un-splittable doc_id key.
-    */
-  private[graft] def removeRepeatedSpansViaJoin(
-      docs: DataFrame, w: Int = 8, minCount: Long = 2): DataFrame = {
-    val spans = repeatedSpans(docs, w, minCount)
-    val toks = docs.select(col("doc_id"),
-      posexplode(split(col("text"), "\\s+")).as(Seq("pos", "tok")))
-    val kept = toks
-      .join(spans, Seq("doc_id"), "left")
-      .withColumn("__in_span",
-        col("span_start").isNotNull &&
-          col("pos") >= col("span_start") && col("pos") < col("span_end"))
-      .groupBy(col("doc_id"), col("pos"), col("tok"))
-      .agg(max(when(col("__in_span"), 1L).otherwise(0L)).as("__covered"))
-    kept.groupBy(col("doc_id"))
-      .agg(
-        concat_ws(" ", transform(
-          array_sort(collect_list(when(col("__covered") === 0,
-            struct(col("pos"), col("tok"))))),
-          s => s.getField("tok"))).as("clean_text"),
-        sum(col("__covered")).as("n_removed_tokens"))
-  }
-
   // ------------------------------------------- connected components
 
   /** Connected components over an undirected near-duplicate pair list:

@@ -267,33 +267,6 @@ object Packing {
         TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens")),
       seqLen, buckets)
 
-  /** Naive single-global-window form: the unit-test baseline for
-    * [[packChunks]] (identical output, single-task at scale — never use
-    * on a real corpus).
-    */
-  private[graft] def packChunksGlobalWindow(
-      docs: DataFrame,
-      seqLen: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    docs.select(
-        col(idCol).cast("long").as("doc_id"),
-        TextAnalysis.tokenCount(col(textCol)).cast("long").as("n_tokens"))
-      .withColumn(
-        "t_start",
-        coalesce(
-          sum("n_tokens").over(Window.orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(
-        col("doc_id"),
-        col("n_tokens"),
-        col("t_start"),
-        expr(s"t_start div ${seqLen}L").as("first_chunk"),
-        expr(s"(t_start + n_tokens - 1) div ${seqLen}L").as("last_chunk"),
-        pmod(col("t_start"), lit(seqLen.toLong)).as("chunk_offset"))
-  }
-
   /** Sliding-window chunking with overlap (the RAG / long-context
     * pre-chunking layout, vs the concat-and-chunk pretraining layout
     * above): each document is cut independently into windows of

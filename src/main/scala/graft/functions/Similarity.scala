@@ -22,13 +22,6 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Quantize a float embedding to exact integer components —
-    * column-level reference form (kept as the semantic baseline for
-    * the native kernel's equivalence test).
-    */
-  def quantizedHof(embedding: Column, scale: Int = 1000): Column =
-    transform(embedding, x => round(x * scale).cast("long"))
-
   /** Quantize a float embedding to exact integer components. Native
     * codegen'd kernel; HALF_UP rounding bit-identical to `round()`.
     * Self-registering: resolves on any session, no pipeline ordering
@@ -1664,7 +1657,7 @@ object Similarity {
     * → lowest code) — ONE `graft_pq_encode` kernel call per row; the
     * codebook rides flat as a single literal folded into a task-level
     * reference object (the m×ksub-struct expression-tree formulation
-    * is kept as [[pqCodesColHof]], the spec baseline — its codegen
+    * is kept in the specs as the baseline — its codegen
     * alone cost more than the whole scan).
     */
   private def pqCodesCol(q: Column, cb: Array[Array[Array[Long]]]): Column =
@@ -1688,35 +1681,4 @@ object Similarity {
   /** Codebook flattened (j, c, d) row-major into one array literal. */
   private def flatCbLit(cb: Array[Array[Array[Long]]]): Column =
     array(cb.flatten.flatten.map(lit).toIndexedSeq: _*)
-
-  // Expression-tree PQ baselines (spec-only): semantics the kernels
-  // must reproduce bit-for-bit, in composed-builtin form.
-  private[graft] def pqCodesColHof(
-      q: Column, cb: Array[Array[Array[Long]]]): Column = {
-    val dsub = cb(0)(0).length
-    array(cb.indices.map { j =>
-      val sub = slice(q, j * dsub + 1, dsub)
-      val scored = cb(j).zipWithIndex.map { case (w, c) =>
-        val wLit = array(w.map(lit).toIndexedSeq: _*)
-        struct(
-          (lit(w.map(x => x * x).sum) -
-            lit(2L) * call_function("graft_dot", sub, wLit)).as("d"),
-          lit(c).as("c"))
-      }
-      array_min(array(scored.toIndexedSeq: _*)).getField("c").cast("long")
-    }: _*)
-  }
-
-  private[graft] def pqDistTableColHof(
-      q: Column, cb: Array[Array[Array[Long]]]): Column = {
-    val dsub = cb(0)(0).length
-    flatten(array(cb.indices.map { j =>
-      val qsub = slice(q, j * dsub + 1, dsub)
-      array(cb(j).zipWithIndex.map { case (w, _) =>
-        val wLit = array(w.map(lit).toIndexedSeq: _*)
-        call_function("graft_norm_sq", qsub) + lit(w.map(x => x * x).sum) -
-          lit(2L) * call_function("graft_dot", qsub, wLit)
-      }.toIndexedSeq: _*)
-    }: _*))
-  }
 }

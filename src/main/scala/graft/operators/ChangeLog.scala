@@ -1,9 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-
-import graft.sources.Readers
 
 /** Change-log-driven incremental selection (SURVEY.md §2.1 S1–S3,
   * §2.4 A2/A3, §2.2 P6).
@@ -14,24 +12,6 @@ import graft.sources.Readers
   * the batches, so the LIMIT/OFFSET loop disappears (SURVEY.md §2.5 W2).
   */
 object ChangeLog {
-
-  /** S1/A1 — count of valid change-log entries
-    * (`models/EtlLogger.js:19-27`).
-    */
-  def totalRecords(spark: SparkSession, sfDir: String): Long =
-    Readers.validChangeLog(spark, sfDir).count()
-
-  /** P6 — validity split with skip accounting: rows missing key or
-    * table are counted, not dropped silently
-    * (`services/etlService.js:612-619`). Uses `observe` so the counts
-    * ride the same job instead of a second scan.
-    */
-  def withSkipMetrics(log: DataFrame): DataFrame =
-    log.observe("changelog",
-        count(lit(1)).as("total"),
-        count(when(col("rsbsa_no").isNull || col("table").isNull, 1))
-          .as("skipped"))
-      .filter(col("rsbsa_no").isNotNull && col("table").isNotNull)
 
   /** A2 — distinct (table, key) work units from the log: the reference
     * builds `{table → {table:rsbsa_no → [entries]}}` in memory

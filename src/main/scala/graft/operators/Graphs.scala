@@ -58,41 +58,6 @@ object Graphs {
     out
   }
 
-  /** (final ranks — value-identical to [[pageRank]] — and the
-    * [[pageRankReport]] certificate row), both from ONE trajectory:
-    * the suite-level answer to running `pageRank` and
-    * `pageRankReport` side by side, which would re-run every round
-    * twice. The extra cost over [[pageRank]] alone is the
-    * prev-round checkpoint only: the changed-count rides the output
-    * materialization job as an `observe` metric
-    * ([[graft.plans.Materialize.withMetrics]]) on the final-round ⟗
-    * prev full join, so there is NO separate compare job (round 11 ran
-    * one — a full-join + count action after the final materialize —
-    * and graph_pagerank regressed 2.9× for it).
-    */
-  def pageRankWithReport(edges: DataFrame, iters: Int,
-      r0: Long = 1000000000L): (DataFrame, DataFrame) = {
-    require(iters >= 2, "need two rounds to compare")
-    val (prev, last, e, freeRounds) = pageRankStates0(edges, iters, r0,
-      materializePrev = true)
-    // From round 1 onward the rank table's node set is exactly the
-    // in-edge node set, so prev (round iters−1 ≥ 1) and last cover the
-    // SAME nodes: the full join is row-for-row the final rank table
-    // plus a `__pr` column, and dropping it back out is value-identical
-    // to [[pageRank]]. The changed-count is observed ON the
-    // materialization; r.isNotNull keeps prev-only rows (impossible by
-    // the set argument, kept for defense) out of the output.
-    val (ck, m) = graft.plans.Materialize.withMetrics(
-      last.join(prev.select(col("node"), col("r").as("__pr")),
-        Seq("node"), "full"),
-      sum(when(not(col("r") <=> col("__pr")), 1L)).as("changed"))
-    val changed = Option(m("changed")).fold(0L)(_.asInstanceOf[Long])
-    val out = ck.filter(col("r").isNotNull).select("node", "r")
-    freeRounds()
-    e.unpersist(blocking = false)
-    (out, certRow(edges, "pagerank", iters, changed))
-  }
-
   /** PERSONALIZED PageRank (Haveliwala 2002 lineage — the
     * recommendation-system face of [[pageRank]]: the random walk
     * teleports only to the SEED set, so ranks measure proximity to
@@ -393,25 +358,7 @@ object Graphs {
     * so a zero count certifies exact convergence.
     */
   def hitsReport(edges: DataFrame, iters: Int,
-      r0: Long = 1000000L): DataFrame =
-    hitsStatesCompared(edges, iters, r0, wantScores = false)._2
-
-  /** (hub/auth scores — value-identical to [[hits]] — and the
-    * [[hitsReport]] certificate row), both from ONE trajectory (the
-    * [[pageRankWithReport]] counterpart). Extra cost over [[hits]]
-    * alone: one retained half-step generation — the changed-count
-    * rides the output materialization job as an `observe` metric, no
-    * separate compare job.
-    */
-  def hitsWithReport(edges: DataFrame, iters: Int,
-      r0: Long = 1000000L): (DataFrame, DataFrame) = {
-    val (scores, report) = hitsStatesCompared(edges, iters, r0,
-      wantScores = true)
-    (scores.get, report)
-  }
-
-  private def hitsStatesCompared(edges: DataFrame, iters: Int,
-      r0: Long, wantScores: Boolean): (Option[DataFrame], DataFrame) = {
+      r0: Long = 1000000L): DataFrame = {
     require(iters >= 2, "need two rounds to compare")
     require(r0 >= 100, "r0 must carry at least 2 decimal digits")
     val e = edges.select(col("src"), col("dst"))
@@ -429,33 +376,16 @@ object Graphs {
       .join(a.select(col("node"), col("a").as(an)), Seq("node"), "left")
       .na.fill(0L, Seq(hn, an))
     // Both filled states cover the SAME node universe, so the inner
-    // compare join is row-for-row the final state plus the prev
-    // columns. When scores are wanted, the changed-count rides the
-    // output materialization as an `observe` metric (the
-    // [[pageRankWithReport]] fusion — no separate compare job) and the
-    // output projects the prev columns back out, value-identical to
-    // [[hits]]. Report-only callers skip the materialization: one
-    // count job over the loop checkpoints is already minimal.
-    val changedCond =
-      col("hub") =!= col("phub") || col("auth") =!= col("pauth")
-    val (scores, changed) = if (wantScores) {
-      val (ck, m) = graft.plans.Materialize.withMetrics(
-        filled(hub, auth, "hub", "auth")
-          .join(filled(hubPrev, authPrev, "phub", "pauth"), Seq("node")),
-        sum(when(changedCond, 1L)).as("changed"))
-      (Some(ck.select("node", "hub", "auth")),
-        Option(m("changed")).fold(0L)(_.asInstanceOf[Long]))
-    } else {
-      (None,
-        filled(hub, auth, "hub", "auth")
-          .join(filled(hubPrev, authPrev, "phub", "pauth"), Seq("node"))
-          .filter(changedCond)
-          .count())
-    }
+    // compare join pairs every node's final state with its prev state;
+    // one count job over the loop checkpoints.
+    val changed = filled(hub, auth, "hub", "auth")
+      .join(filled(hubPrev, authPrev, "phub", "pauth"), Seq("node"))
+      .filter(col("hub") =!= col("phub") || col("auth") =!= col("pauth"))
+      .count()
     freeLoop()
     freeIds(nodes)
     e.unpersist(blocking = false)
-    (scores, certRow(edges, "hits", iters, changed))
+    certRow(edges, "hits", iters, changed)
   }
 
   /** Bounded-depth BFS: exact hop distance (0…maxHops) from a source
@@ -513,6 +443,10 @@ object Graphs {
       dist = dist.union(frontier)
       i += 1
     }
+    // dist reads only checkpointed frontiers; a cached edge table left
+    // behind would serve later reads of the same path (the cache
+    // matches plans by file path, not content)
+    e.unpersist(blocking = false)
     (dist, frontierN)
   }
 
@@ -711,7 +645,7 @@ object Graphs {
     * round (`localCheckpoint`) so plans stay flat at any round count.
     */
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kCoreStates(edges, k, rounds)._2
+    kCoreStates(edges, k, rounds)._1
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
 
   /** Shared observe-count-on-materialization step (the
@@ -724,21 +658,19 @@ object Graphs {
     (ck, m("n").asInstanceOf[Long])
   }
 
-  /** Last two peeling states — (round rounds−1 edges, round rounds
-    * edges, their edge counts); counts ride as `observe` metrics on
-    * the per-round checkpoints (the [[kHopDistances]] discipline), so
-    * the convergence report costs ZERO extra jobs.
+  /** Final peeling state — (round rounds edges, round rounds−1 edge
+    * count, round rounds edge count); counts ride as `observe` metrics
+    * on the per-round checkpoints (the [[kHopDistances]] discipline),
+    * so the convergence report costs ZERO extra jobs.
     */
   private def kCoreStates(edges: DataFrame, k: Int,
-      rounds: Int): (DataFrame, DataFrame, Long, Long) = {
+      rounds: Int): (DataFrame, Long, Long) = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
     var (e, n) = ckptCounted(edges.select(
       col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst")))
-    var prev = e
     var prevN = n
     for (_ <- 1 to rounds) {
-      prev = e
       prevN = n
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
@@ -749,7 +681,7 @@ object Graphs {
       e = next._1
       n = next._2
     }
-    (prev, e, prevN, n)
+    (e, prevN, n)
   }
 
   /** Convergence certificate for bounded-round [[kCore]] (the gap
@@ -761,23 +693,12 @@ object Graphs {
     * round budget may have stopped early and the (still sound,
     * over-approximate) output is flagged as such. The fixed round
     * count — and therefore the unrolled oracle — is unchanged; the
-    * certificate is two counts over already-checkpointed states.
-    */
-  def kCoreReport(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kCoreWithReport(edges, k, rounds)._2
-
-  /** (surviving-subgraph degrees — value-identical to [[kCore]] — and
-    * the [[kCoreReport]] certificate row) from ONE peeling: the
     * certificate is the difference of the per-round edge counts that
-    * already ride as `observe` metrics, so it is FREE on top of the
-    * peel (the [[pageRankWithReport]] suite-dedup pattern).
+    * already ride as `observe` metrics on the peel's checkpoints.
     */
-  def kCoreWithReport(edges: DataFrame, k: Int,
-      rounds: Int): (DataFrame, DataFrame) = {
-    val (_, last, prevN, lastN) = kCoreStates(edges, k, rounds)
-    val surv = last.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("degree"))
-    (surv, certRow(edges, "kcore", rounds, prevN - lastN))
+  def kCoreReport(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val (_, prevN, lastN) = kCoreStates(edges, k, rounds)
+    certRow(edges, "kcore", rounds, prevN - lastN)
   }
 
   /** Convergence certificate for bounded-round [[labelPropagation]]:
@@ -797,55 +718,20 @@ object Graphs {
         Seq("node"), "left")
       .filter(not(col("label") <=> col("__prev")))
       .count()
-    edges.sparkSession.range(1).select(lit("labelprop").as("op"),
-      lit(rounds.toLong).as("rounds"),
-      lit(changed).as("changed_last_round"),
-      lit(changed == 0L).as("converged"))
+    certRow(edges, "labelprop", rounds, changed)
   }
 
   /** Convergence certificate for bounded-depth [[kHopDistances]]:
     * `changed_last_round` is the frontier size at `maxHops` — zero
     * means the traversal exhausted the reachable set within budget
     * (the loop's own early-exit condition), nonzero means nodes at
-    * the horizon may still have unvisited neighbors.
+    * the horizon may still have unvisited neighbors. The frontier
+    * size already rides as an `observe` metric on the per-round
+    * checkpoints, so the certificate costs no job beyond the BFS.
     */
   def kHopReport(edges: DataFrame, sources: DataFrame,
       maxHops: Int): DataFrame =
-    kHopWithReport(edges, sources, maxHops)._2
-
-  /** (hop distances — value-identical to [[kHopDistances]] — and the
-    * [[kHopReport]] certificate row) from ONE traversal: the frontier
-    * size already rides as an `observe` metric on the per-round
-    * checkpoints, so the certificate is free on top of the BFS.
-    */
-  def kHopWithReport(edges: DataFrame, sources: DataFrame,
-      maxHops: Int): (DataFrame, DataFrame) = {
-    val (dist, frontierN) = kHopStates(edges, sources, maxHops)
-    (dist, certRow(edges, "bfs", maxHops, frontierN))
-  }
-
-  /** (labeled nodes — value-identical to [[labelPropagation]] — and
-    * the [[labelPropagationReport]] certificate row) from ONE
-    * propagation: both final label states are already checkpointed by
-    * the loop, so the certificate adds one O(nodes) compare-join
-    * count.
-    */
-  def labelPropagationWithReport(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): (DataFrame, DataFrame) = {
-    val (prev, labels, seed, e) = labelPropagationStates0(edges, seeds, rounds)
-    val out = labels
-      .join(seed.select(col("node"), lit(true).as("is_seed")),
-        Seq("node"), "left")
-      .na.fill(false, Seq("is_seed"))
-      .materialize()
-    val changed = labels.select(col("node"), col("label"))
-      .join(prev.select(col("node"), col("label").as("__prev")),
-        Seq("node"), "left")
-      .filter(not(col("label") <=> col("__prev")))
-      .count()
-    e.unpersist(blocking = false)
-    (out, certRow(edges, "labelprop", rounds, changed))
-  }
+    certRow(edges, "bfs", maxHops, kHopStates(edges, sources, maxHops)._2)
 
   // ------------------------------------------------------------- SCC
 

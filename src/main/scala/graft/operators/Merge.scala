@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.schema.{Cardinality, Catalog}
+import graft.schema.Catalog
 
 /** MergeExecutor — the heart of the engine (SURVEY.md §7.2-4).
   *
@@ -17,12 +17,13 @@ import graft.schema.{Cardinality, Catalog}
   * each inside a per-(table,batch) transaction.
   *
   * Spark-first formulation: both strategies are the same DataFrame
-  * algebra — `target.join(incomingKeys, key, "left_anti") UNION incoming`
-  * — differing only in how `incoming` is deduplicated first. No
-  * row-at-a-time probes: the exists-split is a semi/anti join that
-  * Catalyst plans (broadcast-hash when the key set is small, shuffle
-  * hash otherwise via AQE). Batch atomicity without a transactional
-  * store is staged-write + atomic directory swap.
+  * algebra ([[replaceByKey]]) — `target.join(incomingKeys, key,
+  * "left_anti") UNION incoming` — differing only in how `incoming` is
+  * deduplicated first. No row-at-a-time probes: the exists-split is a
+  * semi/anti join that Catalyst plans (broadcast-hash when the key
+  * set is small, shuffle hash otherwise via AQE). Batch atomicity
+  * without a transactional store is staged-write + atomic directory
+  * swap.
   */
 object Merge {
 
@@ -47,39 +48,28 @@ object Merge {
       .filter(col("__rn") === 1).drop("__rn")
   }
 
-  /** One-to-one upsert (K2 guarded by J3): rows for keys present in
-    * `incoming` are replaced by the incoming row; all other target rows
-    * are retained. `incoming` must be ≤1 row per key (use
-    * [[latestPerKey]] upstream when replaying a log).
+  /** Replace-by-key merge, the one plan behind both reference
+    * strategies: every target row whose key appears in `incoming` is
+    * dropped and the incoming rows are inserted; all other target rows
+    * are retained. For a one-to-many table this is the refresh (J4 +
+    * K3 delete-then-insert, `services/etlService.js:85-115`); for a
+    * one-to-one table, whose `incoming` holds ≤1 row per key (use
+    * [[latestPerKey]] upstream when replaying a log), it is the upsert
+    * (K2 guarded by J3).
     */
-  def upsert(target: DataFrame, incoming: DataFrame, key: String): DataFrame = {
+  def replaceByKey(target: DataFrame, incoming: DataFrame, key: String): DataFrame = {
     val incomingKeys = incoming.select(key).distinct()
     target.join(incomingKeys, Seq(key), "left_anti")
       .unionByName(incoming)
   }
 
-  /** One-to-many refresh (J4 + K3): delete-then-insert by key — all
-    * target rows whose key appears in `incoming` are dropped and the
-    * full incoming row set for those keys is inserted
-    * (`services/etlService.js:85-115`).
+  /** Merge one catalog table on its key. The reference's two
+    * strategies (`services/etlService.js:47-51`) share one plan, so the
+    * cardinality class does not change it. Tables outside the catalog
+    * get the reference's default key, `rsbsa_no`.
     */
-  def refresh(target: DataFrame, incoming: DataFrame, key: String): DataFrame = {
-    val incomingKeys = incoming.select(key).distinct()
-    target.join(incomingKeys, Seq(key), "left_anti")
-      .unionByName(incoming)
-  }
-
-  /** Strategy dispatch by catalog cardinality class
-    * (`services/etlService.js:47-51`). Tables outside the catalog get
-    * the reference's default arm: one-to-many refresh on `rsbsa_no`.
-    */
-  def merge(table: String, target: DataFrame, incoming: DataFrame): DataFrame = {
-    val spec = Catalog.specFor(table)
-    spec.cardinality match {
-      case Cardinality.OneToOne  => upsert(target, incoming, spec.key)
-      case Cardinality.OneToMany => refresh(target, incoming, spec.key)
-    }
-  }
+  def merge(table: String, target: DataFrame, incoming: DataFrame): DataFrame =
+    replaceByKey(target, incoming, Catalog.specFor(table).key)
 
   /** Staged atomic publish: write the merged state to a fresh staging
     * dir, then swap it into place with directory renames. Readers see
@@ -125,16 +115,13 @@ object Merge {
       incoming: DataFrame,
       key: String,
       numBuckets: Int,
-      oneToOne: Boolean,
   ): Unit = {
     val bucketed = incoming.withColumn("__bucket", bucketColumn(col(key), numBuckets))
     val touched = bucketed.select("__bucket").distinct()
       .collect().map(_.getInt(0)).sorted // small: ≤ numBuckets values
     val target = spark.read.parquet(targetPath)
       .filter(col("__bucket").isin(touched.map(Integer.valueOf).toIndexedSeq: _*))
-    val merged =
-      if (oneToOne) upsert(target, bucketed, key)
-      else refresh(target, bucketed, key)
+    val merged = replaceByKey(target, bucketed, key)
     // Stage the rewritten buckets, then swap each touched bucket dir into
     // place (Spark cannot overwrite a path it is reading from; the
     // per-bucket swap keeps untouched buckets' files intact and gives

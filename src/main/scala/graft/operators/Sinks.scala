@@ -56,14 +56,6 @@ object Sinks {
       schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** K1 over JDBC — the reference's real sink is a MySQL pool; see
-    * [[graft.sources.Jdbc.append]] (batched writer) and
-    * [[graft.sources.Jdbc.refresh]] (K3 delete-then-insert).
-    */
-  def appendJdbc(
-      df: DataFrame, url: String, table: String, batchSize: Int = 1000): Unit =
-    graft.sources.Jdbc.append(df, url, table, batchSize)
-
   /** K4 — ensure-schema (`CREATE TABLE IF NOT EXISTS`,
     * `services/etlService.js:203-242`): create an empty parquet target
     * with the declared catalog schema if absent. Secondary indexes have

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.Normalize
 import graft.operators.{ChangeLog, Merge}
-import graft.schema.{Cardinality, Catalog}
+import graft.schema.Catalog
 
 /** Run report for one ETL execution (reference
   * `services/etlService.js:671-691`: processed/skipped counts, error
@@ -74,12 +74,6 @@ final class EtlRun(
       ChangeLog.keyedExtract(readSource(table),
         ChangeLog.keysForTable(log, table)
           .withColumnRenamed("rsbsa_no", spec.key), spec.key)
-  }
-
-  /** One table's plan: keys → semi-extract → normalize → merge. */
-  def planTable(log: DataFrame, table: String): DataFrame = {
-    val normalized = Normalize.forTable(extractFor(log, table), table)
-    Merge.merge(table, readTarget(table), normalized)
   }
 
   /** Execute a full run: every table named in the change-log, with the
@@ -152,7 +146,9 @@ final class EtlRun(
           }
         TableResult(table, extracted, extracted, None)
       } catch {
-        case e: Exception => TableResult(table, 0, 0, Some(e.getMessage))
+        // class and message (Throwable.toString): a bare getMessage
+        // drops the class and is null for a message-less exception
+        case e: Exception => TableResult(table, 0, 0, Some(e.toString))
       }
     }
     RunReport(total, skipped, results)

@@ -36,19 +36,6 @@ final case class TableSpec(
   */
 object Catalog {
 
-  /** Change-log record — reference `models/EtlLogger.js:8-13`. */
-  val changeLogSchema: StructType = StructType(Seq(
-    StructField("log_id", LongType, nullable = false),
-    StructField("rsbsa_no", StringType, nullable = true),
-    StructField("table", StringType, nullable = true),
-  ))
-
-  /** Parsed log line — reference `index.js:230-234`. */
-  val logLineSchema: StructType = StructType(Seq(
-    StructField("ts", StringType, nullable = true),
-    StructField("message", StringType, nullable = true),
-  ))
-
   private def spec(
       name: String,
       key: String,
@@ -107,11 +94,4 @@ object Catalog {
     spec("farmparcelownership", "rsbsa_no", Cardinality.OneToMany,
       Seq("encoder_agency", "encoder_fullname")),
   )
-
-  /** Full MySQL→Spark schema transcriptions live in [[Schemas]]
-    * (SURVEY.md §1.2); convenience aliases for the tables unit tests
-    * compute on.
-    */
-  val farmersKyc3Schema: StructType = Schemas.farmersKyc3
-  val farmparcelSchema: StructType = Schemas.farmparcel
 }

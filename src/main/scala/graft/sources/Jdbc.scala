@@ -120,7 +120,11 @@ object Jdbc {
     * would break every keyed DELETE/WHERE; keys get VARCHAR like the
     * reference's own DDL. Non-key strings keep the dialect's unbounded
     * type (the reference has TEXT attachment/remarks fields a
-    * VARCHAR(255) cap would truncate).
+    * VARCHAR(255) cap would truncate). The key column is indexed in
+    * the same step: [[refresh]] deletes by key, and without the index
+    * each `DELETE … WHERE key = ?` scans the whole table, so concurrent
+    * partition transactions lock each other's rows (Derby deadlocks,
+    * SQLState 40001).
     */
   def ensureTable(
       url: String, tableName: String,
@@ -163,9 +167,14 @@ object Jdbc {
         // name would be case-sensitive and unreachable via table());
         // column names are quoted — the catalog declares reserved
         // words like `long` (P9)
+        val keyField = schema.fields.find(_.name.toLowerCase == key)
         val st = conn.createStatement()
-        try st.executeUpdate(s"CREATE TABLE $tableName ($cols)")
-        catch {
+        try {
+          st.executeUpdate(s"CREATE TABLE $tableName ($cols)")
+          keyField.foreach(f => st.executeUpdate(
+            s"CREATE INDEX ${tableName}_key_idx ON $tableName " +
+              s"(${dialect.quoteIdentifier(f.name)})"))
+        } catch {
           // check-then-create is racy: a concurrent ensure may have
           // created it between the probe and here — that IS the
           // documented IF NOT EXISTS outcome, not an error

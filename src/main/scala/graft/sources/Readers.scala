@@ -28,15 +28,6 @@ object Readers {
   def orcTable(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  /** The same keyed-table surface over JDBC (the reference's actual
-    * source is a MySQL pool, `config/db.js:5-35`) — see
-    * [[graft.sources.Jdbc]] for the pushdown/semi-join policy.
-    */
-  def jdbcTable(
-      spark: SparkSession, url: String, name: String,
-      options: Map[String, String] = Map.empty): DataFrame =
-    Jdbc.table(spark, url, name, options)
-
   /** The change-log source (reference `etl_logger_profiling`,
     * `models/EtlLogger.js:8-13`). The driver fixtures model it with
     * `events` (`event_id`→`log_id`, `user_id`→`rsbsa_no`,

@@ -78,20 +78,6 @@ object Streams {
       .select(col("window.start").as("w_start"), col("window.end").as("w_end"),
         col("table"), col("n"), col("total_value"))
 
-  /** Session windows per key (extension): gap-based sessionization of
-    * the change-log.
-    */
-  def sessionizedActivity(
-      log: DataFrame, gap: String = "30 minutes", watermark: String = "2 hours")
-      : DataFrame =
-    log
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", watermark)
-      .groupBy(session_window(col("ts"), gap), col("rsbsa_no"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("session_window.start").as("s_start"),
-        col("session_window.end").as("s_end"), col("rsbsa_no"), col("n_events"))
-
   /** Watermarked stream-stream interval join (extension): pair each
     * left event with the right-stream events for the same key landing
     * in `(l_ts, l_ts + maxDelay]` — cause→effect correlation (an

@@ -552,11 +552,11 @@ class DedupSimilaritySpec extends SparkSpec {
       df.orderBy("doc_id")
         .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
     assert(rows(Packing.packChunks(sparse, 4, buckets = 8)) ==
-      rows(Packing.packChunksGlobalWindow(sparse, 4)))
+      rows(Baselines.packChunksGlobalWindow(sparse, 4)))
 
     // Fixture corpus: distributed form ≡ naive global window.
     assert(rows(Packing.packChunks(docs, 2048, buckets = 16)) ==
-      rows(Packing.packChunksGlobalWindow(docs, 2048)))
+      rows(Baselines.packChunksGlobalWindow(docs, 2048)))
 
     // Duplicate ids must not overlap offsets (ROWS, not RANGE, frame):
     // two id-7 docs of 4 tokens each get distinct 4-token spans.
@@ -569,7 +569,7 @@ class DedupSimilaritySpec extends SparkSpec {
 
     // maxIdHint overload: any upper bound gives identical output.
     assert(rows(Packing.packChunks(sparse, 4, 8, "doc_id", "text", 99999999L))
-      == rows(Packing.packChunksGlobalWindow(sparse, 4)))
+      == rows(Baselines.packChunksGlobalWindow(sparse, 4)))
   }
 
   test("connected components converge on a 300-node path (worst-case diameter)") {
@@ -1334,7 +1334,7 @@ class DedupSimilaritySpec extends SparkSpec {
     def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2))).toMap
     val sweep = asMap(Dedup.removeRepeatedSpans(d, w = 8, minCount = 2))
-    val base = asMap(Dedup.removeRepeatedSpansViaJoin(d, w = 8, minCount = 2))
+    val base = asMap(Baselines.removeRepeatedSpansViaJoin(d, w = 8, minCount = 2))
     assert(sweep == base)
     assert(sweep(1L)._2 == 4000L) // 500 spans × 8 tokens removed
     assert(sweep(3L)._2 == 0L)

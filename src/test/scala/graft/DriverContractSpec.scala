@@ -16,6 +16,34 @@ class DriverContractSpec extends AnyFunSuite {
     assert(Bench.missingCoverage(SparkEntry.queries.keySet - dropped) == Set(dropped))
   }
 
+  test("the library holds the engine: no graft.tools package; Bench and Verify are the only mains") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val walk = Files.walk(root)
+    val files = try walk.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+    assert(files.nonEmpty)
+    def text(f: Path): String = new String(Files.readAllBytes(f),
+      java.nio.charset.StandardCharsets.UTF_8)
+    val toolFiles = files.filter(f =>
+      "(?m)^\\s*package\\s+graft\\.tools\\b".r.findFirstIn(text(f)).isDefined)
+    assert(!Files.exists(root.resolve("graft/tools")) && toolFiles.isEmpty,
+      s"dev tools in the library: $toolFiles")
+    // each `def main(` or `extends App` belongs to the object declared
+    // last before it
+    val mains = files.flatMap { f =>
+      val src = text(f)
+      val objects = "\\bobject\\s+(\\w+)".r.findAllMatchIn(src)
+        .map(m => (m.start, m.group(1))).toList
+      "\\bdef\\s+main\\s*\\(|\\bextends\\s+App\\b".r.findAllMatchIn(src)
+        .map(m => objects.takeWhile(_._1 < m.start).lastOption
+          .fold(s"<no object> in $f")(_._2))
+    }
+    assert(mains.sorted == List("Bench", "Verify"), mains)
+  }
+
   test("priorRaw: reads the raw queries map, rejects a different-SF prior") {
     // the phantom re-run pass compares against the PREVIOUS run's raw
     // seconds — but only when that run was at the same scale factor;

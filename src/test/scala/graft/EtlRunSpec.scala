@@ -158,4 +158,57 @@ class EtlRunSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tgt/farmers_kyc1.parquet").count() == 1)
     assert(report.errorRatePct == 50.0)
   }
+
+  test("failure inside a table's write job: target unchanged, others publish, error names the class") {
+    val src = java.nio.file.Files.createTempDirectory("graft-src6").toString
+    val tgt = java.nio.file.Files.createTempDirectory("graft-tgt6").toString
+    writeFixtures(src)
+    EtlRun.onParquet(spark, src, tgt).run(Seq(
+      (1L, "R1", "farmers_kyc1"), (2L, "R1", "farmers_livelihood"),
+    ).toDF("log_id", "rsbsa_no", "table"))
+    val livBefore = spark.read.parquet(s"$tgt/farmers_livelihood.parquet")
+      .collect().toSet
+    // livelihood's merged frame fails inside its Spark job; farmparcel
+    // fails on the driver with an exception that carries no message
+    val boom = udf((k: String) => {
+      if (k != null) throw new IllegalStateException(s"bad row $k")
+      true
+    })
+    val run = new EtlRun(spark,
+      readSource = name => spark.read.parquet(s"$src/$name.parquet"),
+      readTarget = name => {
+        val p = s"$tgt/$name.parquet"
+        if (java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+          spark.read.parquet(p)
+        else spark.read.parquet(s"$src/$name.parquet").limit(0)
+      },
+      writeTarget = {
+        case ("farmers_livelihood", df) =>
+          graft.operators.Merge.atomicOverwrite(
+            df.filter(boom(col("rsbsa_no"))), s"$tgt/farmers_livelihood.parquet")
+        case ("farmparcel", _) => throw new IllegalStateException()
+        case (name, df) =>
+          graft.operators.Merge.atomicOverwrite(df, s"$tgt/$name.parquet")
+      })
+    val report = run.run(Seq(
+      (3L, "R2", "farmers_kyc1"), (4L, "R2", "farmers_livelihood"),
+      (5L, "R2", "farmparcelownership"),
+    ).toDF("log_id", "rsbsa_no", "table"))
+
+    def error(table: String): Option[String] =
+      report.tables.find(_.table == table).get.error
+    assert(report.errors == 2, report.tables)
+    assert(spark.read.parquet(s"$tgt/farmers_livelihood.parquet")
+      .collect().toSet == livBefore)
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tgt/farmparcel.parquet")))
+    assert(error("farmers_kyc1").isEmpty && error("farmparcelownership").isEmpty)
+    assert(spark.read.parquet(s"$tgt/farmers_kyc1.parquet")
+      .select("rsbsa_no").as[String].collect().toSet == Set("R1", "R2"))
+    assert(spark.read.parquet(s"$tgt/farmparcelownership.parquet")
+      .select("parcel_id").as[String].collect().toSet == Set("P3"))
+    val jobError = error("farmers_livelihood").get
+    assert(jobError.startsWith("org.apache.spark.SparkException: "), jobError)
+    assert(jobError.contains("IllegalStateException: bad row"), jobError)
+    assert(error("farmparcel").contains("java.lang.IllegalStateException"))
+  }
 }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's recommended-configuration contract (`GraftSession`):
-  * the recipe is data, so pin it — Bench/Verify/BenchOne and a
+  * the recipe is data, so pin it — Bench/Verify and a
   * cluster job must run the same semantics-bearing settings (UTC,
   * nanos-as-long) and the same scale knobs (shuffle width, AQE,
   * scan-split size).

@@ -253,23 +253,6 @@ class GraphsSpec extends SparkSpec {
     assert(r(1L) > r(3L) && r(3L) > r(2L))
   }
 
-  test("WithReport entry points: scores and certificate from ONE trajectory match the standalone faces") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 1L),
-      (3L, 4L), (4L, 3L), (2L, 3L), (3L, 2L)).toDF("src", "dst")
-    val (prRanks, prReport) = Graphs.pageRankWithReport(edges, iters = 3)
-    assert(prRanks.as[(Long, Long)].collect().toMap ==
-      Graphs.pageRank(edges, iters = 3).as[(Long, Long)].collect().toMap)
-    assert(prReport.collect().toSeq ==
-      Graphs.pageRankReport(edges, iters = 3).collect().toSeq)
-    val (hScores, hReport) = Graphs.hitsWithReport(edges, iters = 2)
-    assert(hScores.as[(Long, Long, Long)].collect().sorted.toSeq ==
-      Graphs.hits(edges, iters = 2)
-        .as[(Long, Long, Long)].collect().sorted.toSeq)
-    assert(hReport.collect().toSeq ==
-      Graphs.hitsReport(edges, iters = 2).collect().toSeq)
-  }
-
   test("convergence certificates agree with brute-force fixpoint checks on random graphs") {
     import spark.implicits._
     val rnd = new scala.util.Random(0xC0A9)
@@ -416,5 +399,33 @@ class GraphsSpec extends SparkSpec {
       assert(got == bruteScc(edges),
         s"trial $trial drift:\n got  $got\n want ${bruteScc(edges)}")
     }
+  }
+
+  test("graph certificates answer from the data at the given path, whatever ran before") {
+    // the same directory first holds sf0.001, then sf0.01: the
+    // certificate queries must see the new data, not scalars the
+    // producers computed from the old
+    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    val sf001 = "/root/testdata/sf0.01"
+    val dir = Files.createTempDirectory("graft-graph-path")
+    def load(from: String): Unit = Files.list(Paths.get(from)).forEach { f =>
+      val _ = Files.copy(f, dir.resolve(f.getFileName),
+        StandardCopyOption.REPLACE_EXISTING)
+    }
+    def rows(query: String, at: Path = dir): Set[(String, Long, Long, Boolean)] =
+      SparkEntry.queries(query)(spark, at.toString)
+        .as[(String, Long, Long, Boolean)].collect().toSet
+
+    load(sfDir)
+    SparkEntry.queries("graph_pagerank")(spark, dir.toString).count()
+    SparkEntry.queries("graph_hits")(spark, dir.toString).count()
+    SparkEntry.queries("graph_kcore")(spark, dir.toString).count()
+    assert(rows("graph_convergence").exists(r => r._1 == "kcore" && r._3 == 0L))
+    load(sf001)
+    assert(rows("graph_fixpoint_delta") ==
+      Set(("pagerank", 3L, 1600L, false), ("hits", 2L, 1600L, false)))
+    val conv = rows("graph_convergence")
+    assert(conv.exists(_ == (("kcore", 3L, 228L, false))), conv)
+    assert(conv == rows("graph_convergence", Paths.get(sf001)))
   }
 }

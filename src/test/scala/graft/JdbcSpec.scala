@@ -220,6 +220,18 @@ class JdbcSpec extends SparkSpec {
     Jdbc.ensureTable(url, "farmers_kyc1", schema)
     Jdbc.ensureTable(url, "farmers_kyc1", schema) // idempotent
     assert(Jdbc.table(spark, url, "farmers_kyc1").count() == 0)
+    // the merge key is indexed: refresh deletes by key, and a full scan
+    // per DELETE deadlocks concurrent partition transactions
+    val conn = java.sql.DriverManager.getConnection(url)
+    val indexed = try {
+      val rs = conn.getMetaData.getIndexInfo(null, null, "FARMERS_KYC1",
+        false, false)
+      try Iterator.continually(rs).takeWhile(_.next())
+        .map(r => Option(r.getString("COLUMN_NAME")).map(_.toLowerCase))
+        .toList.flatten
+      finally rs.close()
+    } finally conn.close()
+    assert(indexed.contains("rsbsa_no"), indexed)
     // the created table must be USABLE by the keyed refresh — i.e.
     // the KEY column is comparable VARCHAR, not CLOB/TEXT (a
     // dialect-typed key column would break every keyed DELETE) — while

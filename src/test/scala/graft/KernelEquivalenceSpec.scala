@@ -19,7 +19,7 @@ class KernelEquivalenceSpec extends SparkSpec {
 
   test("graft_quantize ≡ quantizedHof on the fixture embeddings") {
     val both = embs.select(
-      Similarity.quantizedHof($"embedding").as("hof"),
+      Baselines.quantizedHof($"embedding").as("hof"),
       Similarity.quantized($"embedding").as("native"))
     assert(both.filter(not($"hof" <=> $"native")).count() == 0)
   }
@@ -34,7 +34,7 @@ class KernelEquivalenceSpec extends SparkSpec {
       Array.empty[Float],
     ).toDF("embedding")
     val both = df.select(
-      Similarity.quantizedHof($"embedding").as("hof"),
+      Baselines.quantizedHof($"embedding").as("hof"),
       Similarity.quantized($"embedding").as("native"))
     assert(both.filter(not($"hof" <=> $"native")).count() == 0)
   }
@@ -45,7 +45,7 @@ class KernelEquivalenceSpec extends SparkSpec {
       Array(-0.9999995, 1e-12, -1e-12),
     ).toDF("embedding")
     val both = df.select(
-      Similarity.quantizedHof($"embedding").as("hof"),
+      Baselines.quantizedHof($"embedding").as("hof"),
       Similarity.quantized($"embedding").as("native"))
     assert(both.filter(not($"hof" <=> $"native")).count() == 0)
   }
@@ -116,9 +116,9 @@ class KernelEquivalenceSpec extends SparkSpec {
     val q = embs.select($"vec_id", Similarity.quantized($"embedding").as("q"))
     val both = q.select(
       call_function("graft_pq_encode", $"q", flat, lit(8), lit(16)).as("kc"),
-      Similarity.pqCodesColHof($"q", cb).as("hc"),
+      Baselines.pqCodesColHof($"q", cb).as("hc"),
       call_function("graft_pq_dt", $"q", flat, lit(8), lit(16)).as("kt"),
-      Similarity.pqDistTableColHof($"q", cb).as("ht"))
+      Baselines.pqDistTableColHof($"q", cb).as("ht"))
     assert(both.filter(not($"kc" <=> $"hc") || not($"kt" <=> $"ht")).count() == 0)
     // ADC kernel vs the zip_with/element_at fold over the same inputs
     val adcBoth = both.select(
@@ -154,7 +154,7 @@ class KernelEquivalenceSpec extends SparkSpec {
       Array.fill(rnd.nextInt(96) + 1)(rnd.nextDouble() * 4 - 2)).toDF("embedding")
     for (df <- Seq(floats, doubles)) {
       val q = df.select(
-        Similarity.quantizedHof($"embedding").as("hof"),
+        Baselines.quantizedHof($"embedding").as("hof"),
         Similarity.quantized($"embedding").as("native"))
       assert(q.filter(not($"hof" <=> $"native")).count() == 0)
       val h = df.select(

@@ -51,7 +51,7 @@ class MergePropertiesSpec extends SparkSpec {
         .toDF("rsbsa_no", "name", "v", "log_id")
       val latest = Merge.latestPerKey(incoming, "rsbsa_no", "log_id")
         .drop("log_id")
-      val out = Merge.upsert(target, latest, "rsbsa_no")
+      val out = Merge.replaceByKey(target, latest, "rsbsa_no")
       assert(out.groupBy("rsbsa_no").count()
         .filter($"count" > 1).count() == 0)
     }
@@ -61,7 +61,7 @@ class MergePropertiesSpec extends SparkSpec {
     for ((t, inc) <- samples(Gen.zip(rowsGen, rowsGen), 6)) {
       val target = t.toDF("rsbsa_no", "name", "v")
       val incoming = inc.toDF("rsbsa_no", "name", "v")
-      val out = Merge.refresh(target, incoming, "rsbsa_no")
+      val out = Merge.replaceByKey(target, incoming, "rsbsa_no")
       val touched = incoming.select("rsbsa_no").distinct()
       val touchedOut = out.join(touched, Seq("rsbsa_no"), "left_semi")
       assert(touchedOut.exceptAll(incoming).isEmpty
@@ -82,12 +82,10 @@ class MergePropertiesSpec extends SparkSpec {
         .toDF("rsbsa_no", "name", "v")
       val incoming = inc.groupBy(_._1).map(_._2.head).toSeq
         .toDF("rsbsa_no", "name", "v")
-      val u1 = Merge.upsert(target, incoming, "rsbsa_no")
-      val u2 = Merge.upsert(u1, incoming, "rsbsa_no")
+      // one plan serves both strategies (Merge.replaceByKey)
+      val u1 = Merge.replaceByKey(target, incoming, "rsbsa_no")
+      val u2 = Merge.replaceByKey(u1, incoming, "rsbsa_no")
       assert(u1.exceptAll(u2).isEmpty && u2.exceptAll(u1).isEmpty)
-      val r1 = Merge.refresh(target, incoming, "rsbsa_no")
-      val r2 = Merge.refresh(r1, incoming, "rsbsa_no")
-      assert(r1.exceptAll(r2).isEmpty && r2.exceptAll(r1).isEmpty)
     }
   }
 

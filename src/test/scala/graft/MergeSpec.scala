@@ -28,7 +28,7 @@ class MergeSpec extends SparkSpec {
   test("upsert: replaces touched keys, keeps untouched, inserts new, ≤1 row/key") {
     val incoming = Seq(("R2", "new-b", 20), ("R9", "new-i", 90))
       .toDF("rsbsa_no", "name", "v")
-    val out = Merge.upsert(target, incoming, "rsbsa_no")
+    val out = Merge.replaceByKey(target, incoming, "rsbsa_no")
     val rows = out.as[(String, String, Int)].collect().toSet
     assert(rows == Set(
       ("R1", "old-a", 1), ("R3", "old-c", 3),    // untouched unchanged
@@ -41,7 +41,7 @@ class MergeSpec extends SparkSpec {
     val t = Seq(("R1", 1), ("R1", 2), ("R2", 3), ("R3", 4))
       .toDF("rsbsa_no", "v")
     val incoming = Seq(("R1", 10), ("R1", 11), ("R1", 12)).toDF("rsbsa_no", "v")
-    val out = Merge.refresh(t, incoming, "rsbsa_no")
+    val out = Merge.replaceByKey(t, incoming, "rsbsa_no")
     val r1 = out.filter($"rsbsa_no" === "R1").select("v").as[Int].collect().sorted
     assert(r1.sameElements(Array(10, 11, 12))) // exact mirror, old rows gone
     assert(out.filter($"rsbsa_no" === "R2").count() == 1) // untouched
@@ -59,13 +59,13 @@ class MergeSpec extends SparkSpec {
 
   test("replay idempotence: merging the same incoming twice is a no-op") {
     val incoming = Seq(("R2", "new-b", 20)).toDF("rsbsa_no", "name", "v")
-    val once = Merge.upsert(target, incoming, "rsbsa_no")
-    val twice = Merge.upsert(once, incoming, "rsbsa_no")
+    val once = Merge.replaceByKey(target, incoming, "rsbsa_no")
+    val twice = Merge.replaceByKey(once, incoming, "rsbsa_no")
     assert(twice.exceptAll(once).isEmpty && once.exceptAll(twice).isEmpty)
     val t = Seq(("R1", 1), ("R2", 3)).toDF("rsbsa_no", "v")
     val inc = Seq(("R1", 10)).toDF("rsbsa_no", "v")
-    val ronce = Merge.refresh(t, inc, "rsbsa_no")
-    val rtwice = Merge.refresh(ronce, inc, "rsbsa_no")
+    val ronce = Merge.replaceByKey(t, inc, "rsbsa_no")
+    val rtwice = Merge.replaceByKey(ronce, inc, "rsbsa_no")
     assert(rtwice.exceptAll(ronce).isEmpty && ronce.exceptAll(rtwice).isEmpty)
   }
 
@@ -75,7 +75,7 @@ class MergeSpec extends SparkSpec {
     Merge.atomicOverwrite(target, path)
     assert(spark.read.parquet(path).count() == 3)
     val incoming = Seq(("R2", "new-b", 20)).toDF("rsbsa_no", "name", "v")
-    val merged = Merge.upsert(spark.read.parquet(path), incoming, "rsbsa_no")
+    val merged = Merge.replaceByKey(spark.read.parquet(path), incoming, "rsbsa_no")
     Merge.atomicOverwrite(merged, path)
     val back = spark.read.parquet(path)
     assert(back.count() == 3)
@@ -96,7 +96,7 @@ class MergeSpec extends SparkSpec {
     val before = java.nio.file.Files.list(java.nio.file.Paths.get(path))
       .toArray.map(_.toString).filter(_.contains("__bucket=")).sorted
     val incoming = Seq(("R7", 99)).toDF("rsbsa_no", "v")
-    Merge.bucketedMerge(spark, path, incoming, "rsbsa_no", n, oneToOne = true)
+    Merge.bucketedMerge(spark, path, incoming, "rsbsa_no", n)
     val back = spark.read.parquet(path)
     assert(back.count() == 200)
     assert(back.filter($"rsbsa_no" === "R7").select("v").as[Int].head() == 99)

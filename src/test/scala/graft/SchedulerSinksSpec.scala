@@ -203,7 +203,7 @@ class SchedulerSinksSpec extends SparkSpec {
     val df = spark.read.parquet(s"$dir/farmparcel.parquet")
     // parquet read-back is always nullable — compare names + types
     assert(df.schema.fields.map(f => (f.name, f.dataType)).toSeq
-      == graft.schema.Catalog.farmparcelSchema.fields
+      == graft.schema.Schemas.farmparcel.fields
         .map(f => (f.name, f.dataType)).toSeq)
     assert(df.count() == 0)
     Sinks.ensureCatalogTable(spark, dir, "farmparcel") // idempotent

@@ -360,7 +360,7 @@ class StreamingSpec extends SparkSpec {
       val q = Streams.replay(
         Streams.changeLogStream(spark, s"$srcDir/*"),
         onBatch = (batch, _) => {
-          val merged = operators.Merge.upsert(
+          val merged = operators.Merge.replaceByKey(
             spark.read.parquet(tgt),
             operators.Merge.latestPerKey(
               batch.select($"rsbsa_no", $"log_id",
