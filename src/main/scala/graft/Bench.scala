@@ -254,6 +254,47 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
 
+  /** One query's bench reading: the best of at least two timed
+    * executions after an untimed warm-up, or the first failure's
+    * message. Each execution produces the whole result through the
+    * `noop` sink, so every column the query computes is computed; a
+    * `count()` would let Catalyst prune the columns it does not need.
+    */
+  def timeOne(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
+      : Either[String, Double] = {
+    // deterministic isolation: free the previous query's leftover
+    // checkpoint blocks NOW, and BLOCK until the removal completes —
+    // a non-blocking unpersist leaves the block-manager removals
+    // running concurrently with the next timed sample (round-10's
+    // dedup_cluster_sizes 3x in-suite phantom never reproduced
+    // standalone; overlapping async cleanup was the one systematic
+    // in-suite-only difference, so it is removed from the protocol)
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = true))
+    System.gc()
+    def run(): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        Left((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(300)) }
+    }
+    run().flatMap { _ => // warm-up: codegen + JIT, untimed
+      val samples = scala.collection.mutable.ArrayBuffer[Double]()
+      var failed: Option[String] = None
+      while (failed.isEmpty && samples.size < 3 &&
+          (samples.size < 2 || samples.max > samples.min * 2)) {
+        run() match {
+          case Left(err) => failed = Some(err)
+          case Right(t) => samples += t
+        }
+      }
+      failed.toLeft(samples.min)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
@@ -266,48 +307,15 @@ object Bench {
     val canaryIoFirst = canaryIo(spark)
     val prior = priorRaw(sfDir = sfDir)
 
-    def isolate(): Unit = {
-      // deterministic isolation: free the previous query's leftover
-      // checkpoint blocks NOW, and BLOCK until the removal completes —
-      // a non-blocking unpersist leaves the block-manager removals
-      // running concurrently with the next timed sample (round-10's
-      // dedup_cluster_sizes 3x in-suite phantom never reproduced
-      // standalone; overlapping async cleanup was the one systematic
-      // in-suite-only difference, so it is removed from the protocol)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-      System.gc()
-    }
-    def timeOne(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      isolate()
-      def run(): Either[String, Double] = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
-          Left((e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage)).take(300)) }
-      }
-      run() match { // warm-up: codegen + JIT, untimed
+    def timeQuery(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      timeOne(spark, sfDir, fn) match {
         case Left(err) => errors(name) = err; -1.0
-        case Right(_) =>
-          val samples = scala.collection.mutable.ArrayBuffer[Double]()
-          var failed: Option[String] = None
-          while (failed.isEmpty && samples.size < 3 &&
-              (samples.size < 2 || samples.max > samples.min * 2)) {
-            run() match {
-              case Left(err) => failed = Some(err)
-              case Right(t) => samples += t
-            }
-          }
-          failed match {
-            case Some(err) => errors(name) = err; -1.0
-            case None => samples.min
-          }
+        case Right(t) => t
       }
-    }
 
     val suite = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> timeOne(name, fn)
+      name -> timeQuery(name, fn)
     }
 
     // Phantom bisect (automated round-9): host-contention windows
@@ -338,7 +346,7 @@ object Bench {
     val reruns = suspects.map { case (name, _) =>
       val ioBefore = canaryIoOnce(spark)
       val cpuBefore = canaryCpuOnce(spark)
-      val t = timeOne(name, SparkEntry.queries(name))
+      val t = timeQuery(name, SparkEntry.queries(name))
       val cpuAfter = canaryCpuOnce(spark)
       val ioAfter = canaryIoOnce(spark)
       name -> ((t, ioBefore, ioAfter, cpuBefore, cpuAfter)) }.toMap

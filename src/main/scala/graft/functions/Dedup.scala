@@ -482,12 +482,20 @@ object Dedup {
     * as observe metrics: when `guarded` (the broadcast budget passed,
     * so the stream is small by construction), a window attaches each
     * row's prefix-internal posting count c(sh), and `sum(c)` over the
-    * rows equals Σ_sh c(sh)² — the EXACT prefix×prefix match-row
-    * count, the same statistic the guard used to compute with its own
-    * driver action. The window's hash exchange exists only on this
-    * gated small-data arm; the corpus-scale arm checkpoints the plain
-    * projection, plan-identical to round 14. Returns (prefix table —
-    * column set unchanged, matchRows, prefixRows).
+    * rows equals Σ_sh c(sh)², the same statistic the guard used to
+    * compute with its own driver action. On the self-join path that
+    * is the EXACT prefix×prefix match-row count. On the incremental
+    * (delta) path the join matches only delta-prefix rows against the
+    * rest, so Σ c(sh)² over the combined table is an UPPER bound: a
+    * small delta over a large history can be sent to the dedup-first
+    * arm when verify-first would have been cheaper. The window's hash
+    * exchange exists only on this gated small-data arm; the
+    * corpus-scale arm checkpoints the plain projection, plan-identical
+    * to round 14. Trade-off: the window sends every row of a hot
+    * shingle to one task, where the old two-stage aggregate combined
+    * map-side; the skew is bounded by the broadcast budget gate, so it
+    * costs time, never correctness. Returns (prefix table — column set
+    * unchanged, matchRows, prefixRows).
     */
   private def meteredPrefix(filtered: DataFrame, np: Int,
       guarded: Boolean): (DataFrame, Long, Long) =

@@ -39,9 +39,11 @@ final case class RunReport(
   * `farmparcelownership → farmparcel`, and report counts
   * (`services/etlService.js:694-743`). Here each table becomes ONE
   * logical plan — `log → distinct keys → semi-join source → normalize
-  * → merge` — that Catalyst optimizes end-to-end; the only driver loop
-  * is over table names. Pagination is gone: Spark partitions are the
-  * batches.
+  * → merge` — that Catalyst optimizes end-to-end. The tables' plans
+  * are independent (each writes only its own target), so a run submits
+  * them together, one thread per table, and Spark's scheduler shares
+  * the cores between their jobs. Pagination is gone: Spark partitions
+  * are the batches.
   *
   * Storage layout: `tablesDir/<name>.parquet` for source extracts and
   * `targetDir/<name>.parquet` for merge targets; merges publish
@@ -80,79 +82,118 @@ final class EtlRun(
     * reference's cascade (a `farmparcelownership` sync re-syncs
     * `farmparcel`, `services/etlService.js:642-654`) and per-table
     * failure isolation (R8: one table failing doesn't abort the run).
+    *
+    * One aggregate over the log yields the total, the valid count and
+    * the named tables. The tables' plans are then submitted together,
+    * one thread each, and Spark's scheduler shares the cores between
+    * their jobs: each plan is a chain of small jobs, so run one after
+    * another the cores sat idle through every table's driver-side
+    * planning, observation wait and publish. Concurrency is safe
+    * because the tables are independent: each writes only its own
+    * target, the cascade reads the SOURCE ownership table, and each
+    * table has its own `Observation`. `run` returns only after every
+    * table thread has ended, with results in sorted table order.
     */
   def run(log: DataFrame): RunReport = {
-    val total = log.count()
-    val valid = log.filter(col("rsbsa_no").isNotNull && col("table").isNotNull)
-    val skipped = total - valid.count()
-    val named = valid.select("table").distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+    val isValid = col("rsbsa_no").isNotNull && col("table").isNotNull
+    val preamble = log.agg(count(lit(1)), count_if(isValid),
+      collect_set(when(isValid, col("table")))).head()
+    val total = preamble.getLong(0)
+    val skipped = total - preamble.getLong(1)
+    val named = preamble.getSeq[String](2).sorted
     val tables =
       if (named.contains("farmparcelownership") && !named.contains("farmparcel"))
         named :+ "farmparcel"
       else named
-    val cascaded = EtlRun.cascadeLog(valid)
-    val results = tables.map { table =>
+    if (tables.isEmpty) return RunReport(total, skipped, Nil)
+    val cascaded = EtlRun.cascadeLog(log.filter(isValid))
+    // One thread per table, at most one per catalog table: the log is
+    // outside input and may name any number of unknown tables. Threads
+    // made for this run inherit the caller's Spark local properties
+    // (job group, scheduler pool) as they stand now.
+    val threads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.min(tables.size, Catalog.tables.size), r => {
+        val t = new Thread(r); t.setDaemon(true); threads.add(t); t
+      })
+    val results =
       try {
-        // Single pass per table: the extraction count rides the merge
-        // write as an `observe` metric instead of a separate
-        // `extract.count()` job (which re-ran the whole extract — at
-        // 100 TB that doubled every per-table scan+shuffle). The
-        // incoming side is tagged so the metric counts exactly the
-        // rows this run merged in ("Processed" semantics —
-        // normalization and both merge strategies are row-preserving
-        // on the incoming side); the tag is dropped before the write.
-        val obs = org.apache.spark.sql.Observation()
-        incrementalWrite match {
-          case Some(write) =>
-            // Target store merges in place (a transactional
-            // delete-then-insert by key IS the merge there): ship ONLY
-            // the normalized incoming rows — O(incoming), never
-            // O(target) — with the count riding the same job.
-            val incoming = Normalize
-              .forTable(extractFor(cascaded, table), table)
-              .observe(obs, count(lit(1)).as("extracted"))
-            write(table, incoming)
-          case None =>
-            val normalized = Normalize
-              .forTable(extractFor(cascaded, table), table)
-              .withColumn("__incoming", lit(true))
-            val target = readTarget(table).withColumn("__incoming", lit(false))
-            val merged = Merge.merge(table, target, normalized)
-              .observe(obs, sum(when(col("__incoming"), 1L).otherwise(0L))
-                .as("extracted"))
-              .drop("__incoming")
-            writeTarget(table, merged)
+        val pending = tables.map(table => pool.submit { () =>
+          Thread.currentThread.setName(s"graft-etl-$table")
+          runTable(cascaded, table)
+        })
+        pending.map { f =>
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
         }
-        // The metric lands via the (async) listener bus shortly after
-        // the write job ends. A writeTarget that never executes the
-        // observed plan (a dry-run or test double) would make the
-        // blocking obs.get hang forever — so bound the wait and fall
-        // back to a direct count (correct, just the old two-pass cost)
-        // if no observation arrives.
-        val extracted =
-          try {
-            val got = scala.concurrent.Await.result(
-              scala.concurrent.Future(obs.get)(
-                scala.concurrent.ExecutionContext.global),
-              scala.concurrent.duration.Duration(10, "s"))
-            got.get("extracted") match {
-              case Some(n: java.lang.Number) => n.longValue()
-              case _ => 0L // sum over an empty merge result is SQL NULL
-            }
-          } catch {
-            case _: java.util.concurrent.TimeoutException =>
-              extractFor(cascaded, table).count()
-          }
-        TableResult(table, extracted, extracted, None)
-      } catch {
-        // class and message (Throwable.toString): a bare getMessage
-        // drops the class and is null for a message-less exception
-        case e: Exception => TableResult(table, 0, 0, Some(e.toString))
+      } finally {
+        pool.shutdown()
+        // a table still writing when the caller gives up finishes
+        // first: no publish happens after `run` returns
+        threads.forEach(_.join())
       }
-    }
     RunReport(total, skipped, results)
   }
+
+  /** One table's merge: extract, normalize, merge and publish, with
+    * failures caught into its [[TableResult]].
+    */
+  private def runTable(cascaded: DataFrame, table: String): TableResult =
+    try {
+      // Single pass per table: the extraction count rides the merge
+      // write as an `observe` metric instead of a separate
+      // `extract.count()` job (which re-ran the whole extract — at
+      // 100 TB that doubled every per-table scan+shuffle). The
+      // incoming side is tagged so the metric counts exactly the
+      // rows this run merged in ("Processed" semantics —
+      // normalization and both merge strategies are row-preserving
+      // on the incoming side); the tag is dropped before the write.
+      val obs = org.apache.spark.sql.Observation()
+      incrementalWrite match {
+        case Some(write) =>
+          // Target store merges in place (a transactional
+          // delete-then-insert by key IS the merge there): ship ONLY
+          // the normalized incoming rows — O(incoming), never
+          // O(target) — with the count riding the same job.
+          val incoming = Normalize
+            .forTable(extractFor(cascaded, table), table)
+            .observe(obs, count(lit(1)).as("extracted"))
+          write(table, incoming)
+        case None =>
+          val normalized = Normalize
+            .forTable(extractFor(cascaded, table), table)
+            .withColumn("__incoming", lit(true))
+          val target = readTarget(table).withColumn("__incoming", lit(false))
+          val merged = Merge.merge(table, target, normalized)
+            .observe(obs, sum(when(col("__incoming"), 1L).otherwise(0L))
+              .as("extracted"))
+            .drop("__incoming")
+          writeTarget(table, merged)
+      }
+      // The metric lands via the (async) listener bus shortly after
+      // the write job ends. A writeTarget that never executes the
+      // observed plan (a dry-run or test double) would leave the
+      // observation pending forever — so bound the wait and fall back
+      // to a direct count (correct, just the old two-pass cost) if no
+      // observation arrives.
+      val extracted =
+        try {
+          val got = scala.concurrent.Await.result(obs.future,
+            scala.concurrent.duration.Duration(10, "s"))
+          got.get(0) match {
+            case n: java.lang.Number => n.longValue()
+            case _ => 0L // sum over an empty merge result is SQL NULL
+          }
+        } catch {
+          case _: java.util.concurrent.TimeoutException =>
+            extractFor(cascaded, table).count()
+        }
+      TableResult(table, extracted, extracted, None)
+    } catch {
+      // class and message (Throwable.toString): a bare getMessage
+      // drops the class and is null for a message-less exception
+      case e: Exception => TableResult(table, 0, 0, Some(e.toString))
+    }
 }
 
 object EtlRun {

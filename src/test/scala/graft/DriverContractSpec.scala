@@ -16,6 +16,18 @@ class DriverContractSpec extends AnyFunSuite {
     assert(Bench.missingCoverage(SparkEntry.queries.keySet - dropped) == Set(dropped))
   }
 
+  test("timeOne produces every column of the result, not only its row count") {
+    import org.apache.spark.sql.functions.{col, udf}
+    val spark = TestSpark.spark
+    val produced = spark.sparkContext.longAccumulator("bench-produced-rows")
+    val bump = udf((i: Long) => { produced.add(1); i * 2 })
+    val timed = Bench.timeOne(spark, "",
+      (s, _) => s.range(10).select(col("id"), bump(col("id")).as("twice")))
+    assert(timed.exists(_ >= 0), timed)
+    // a count() prunes the UDF column and never calls it
+    assert(produced.value > 0)
+  }
+
   test("the library holds the engine: no graft.tools package; Bench and Verify are the only mains") {
     import java.nio.file.{Files, Path, Paths}
     import scala.jdk.CollectionConverters._

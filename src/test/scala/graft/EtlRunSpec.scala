@@ -32,6 +32,14 @@ class EtlRunSpec extends SparkSpec {
       .write.parquet(s"$dir/farmparcel.parquet")
   }
 
+  /** The run's per-table threads (`graft-etl-<table>`) still alive. */
+  private def liveTableThreads(report: graft.pipeline.RunReport): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val names = report.tables.map(t => s"graft-etl-${t.table}").toSet
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && names(t.getName)).map(_.getName).toSet
+  }
+
   test("full run: replay, normalize, merge, cascade, fan-out counts") {
     val src = java.nio.file.Files.createTempDirectory("graft-src").toString
     val tgt = java.nio.file.Files.createTempDirectory("graft-tgt").toString
@@ -135,12 +143,13 @@ class EtlRunSpec extends SparkSpec {
       while (System.currentTimeMillis() < deadline && funcs.size != last) {
         last = funcs.size; Thread.sleep(300)
       }
-      // 3 driver-side bookkeeping actions (total count, skipped count,
-      // table-name list) + exactly ONE action per table: the merge
-      // write carrying the observe metric. A 2nd per-table action means
-      // the extract ran twice (the pre-round-3 double-scan).
-      assert(funcs.size == 3 + report.tables.size,
-        s"expected ${3 + report.tables.size} executions, saw: $funcs")
+      // ONE driver-side bookkeeping action (total, valid count and
+      // table-name list in a single aggregate over the log) + exactly
+      // ONE action per table: the merge write carrying the observe
+      // metric. A 2nd per-table action means the extract ran twice
+      // (the pre-round-3 double-scan).
+      assert(funcs.size == 1 + report.tables.size,
+        s"expected ${1 + report.tables.size} executions, saw: $funcs")
     } finally spark.listenerManager.unregister(listener)
   }
 
@@ -154,6 +163,7 @@ class EtlRunSpec extends SparkSpec {
     ).toDF("log_id", "rsbsa_no", "table")
     val report = EtlRun.onParquet(spark, src, tgt).run(log)
     assert(report.errors == 1)
+    assert(liveTableThreads(report).isEmpty)
     assert(report.tables.find(_.table == "farmers_kyc1").get.error.isEmpty)
     assert(spark.read.parquet(s"$tgt/farmers_kyc1.parquet").count() == 1)
     assert(report.errorRatePct == 50.0)
@@ -210,5 +220,74 @@ class EtlRunSpec extends SparkSpec {
     assert(jobError.startsWith("org.apache.spark.SparkException: "), jobError)
     assert(jobError.contains("IllegalStateException: bad row"), jobError)
     assert(error("farmparcel").contains("java.lang.IllegalStateException"))
+  }
+
+  test("tables run concurrently: every table's write is in flight at once") {
+    val src = java.nio.file.Files.createTempDirectory("graft-src7").toString
+    val tgt = java.nio.file.Files.createTempDirectory("graft-tgt7").toString
+    writeFixtures(src)
+    // three named tables + the farmparcel cascade = four writes; each
+    // waits until all four have started, which only a concurrent run
+    // gets past (one after another, the first wait times out)
+    val started = new java.util.concurrent.CountDownLatch(4)
+    val run = new EtlRun(spark,
+      readSource = name => spark.read.parquet(s"$src/$name.parquet"),
+      readTarget = name => spark.read.parquet(s"$src/$name.parquet").limit(0),
+      writeTarget = (name, df) => {
+        started.countDown()
+        if (!started.await(30, java.util.concurrent.TimeUnit.SECONDS))
+          throw new IllegalStateException(s"$name wrote alone")
+        graft.operators.Merge.atomicOverwrite(df, s"$tgt/$name.parquet")
+      })
+    val report = run.run(Seq(
+      (1L, "R1", "farmers_kyc1"), (2L, "R1", "farmers_livelihood"),
+      (3L, "R1", "farmparcelownership"),
+    ).toDF("log_id", "rsbsa_no", "table"))
+    assert(report.tables.map(_.table) == Seq("farmers_kyc1",
+      "farmers_livelihood", "farmparcelownership", "farmparcel"))
+    assert(report.errors == 0, report.tables)
+    assert(report.tables.map(_.merged) == Seq(1L, 2L, 2L, 2L))
+    for (t <- report.tables)
+      assert(java.nio.file.Files.exists(java.nio.file.Paths.get(s"$tgt/${t.table}.parquet")))
+    assert(liveTableThreads(report).isEmpty)
+  }
+
+  test("a log naming more tables than the catalog runs them all on at most 12 threads") {
+    val src = java.nio.file.Files.createTempDirectory("graft-src9").toString
+    val tgt = java.nio.file.Files.createTempDirectory("graft-tgt9").toString
+    writeFixtures(src)
+    // unknown names take the default one-to-many arm; each reads the
+    // kyc1 fixture as its source
+    val names = (0 until 20).map(i => f"extra_$i%02d")
+    val workers = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    val run = new EtlRun(spark,
+      readSource = _ => {
+        workers.add(Thread.currentThread)
+        spark.read.parquet(s"$src/farmers_kyc1.parquet")
+      },
+      readTarget = _ => spark.read.parquet(s"$src/farmers_kyc1.parquet").limit(0),
+      writeTarget = (name, df) =>
+        graft.operators.Merge.atomicOverwrite(df, s"$tgt/$name.parquet"))
+    val report = run.run(names.zipWithIndex
+      .map { case (n, i) => (i.toLong, "R1", n) }.toDF("log_id", "rsbsa_no", "table"))
+    assert(report.tables.map(_.table) == names)
+    assert(report.errors == 0, report.tables)
+    assert(report.tables.forall(_.merged == 1))
+    assert(workers.size <= graft.schema.Catalog.tables.size, workers.size)
+    assert(liveTableThreads(report).isEmpty)
+  }
+
+  test("a log naming no valid table reports its counts and touches no target") {
+    val src = java.nio.file.Files.createTempDirectory("graft-src8").toString
+    val tgt = java.nio.file.Files.createTempDirectory("graft-tgt8").resolve("out")
+    writeFixtures(src)
+    val run = EtlRun.onParquet(spark, src, tgt.toString)
+    val empty = Seq.empty[(Long, String, String)].toDF("log_id", "rsbsa_no", "table")
+    assert(run.run(empty) == graft.pipeline.RunReport(0, 0, Nil))
+    val invalid = Seq[(Long, String, String)](
+      (1L, null, "farmers_kyc1"), (2L, "R1", null), (3L, null, null),
+    ).toDF("log_id", "rsbsa_no", "table")
+    assert(run.run(invalid) == graft.pipeline.RunReport(3, 3, Nil))
+    assert(!java.nio.file.Files.exists(tgt))
   }
 }

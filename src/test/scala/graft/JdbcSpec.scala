@@ -91,24 +91,46 @@ class JdbcSpec extends SparkSpec {
     // The reference's deployment: relational source pool in, relational
     // target pool out. Extract is keyed+pushed-down; the target merges
     // IN PLACE — only incoming rows ship (never an O(target) rewrite).
+    // The log names three tables and the ownership change cascades to
+    // farmparcel, so four refresh transactions run on the target at once.
     val srcUrl = freshDb()
     val tgtUrl = freshDb()
-    exec(srcUrl,
+    val ddl = Seq(
       "CREATE TABLE farmers_kyc1 (rsbsa_no VARCHAR(20) NOT NULL, first_name VARCHAR(50), surname VARCHAR(50))",
-      "INSERT INTO farmers_kyc1 VALUES ('R1','juan','cruz'), ('R2','maria','santos')")
-    exec(tgtUrl,
-      "CREATE TABLE farmers_kyc1 (rsbsa_no VARCHAR(20) NOT NULL, first_name VARCHAR(50), surname VARCHAR(50))",
-      "INSERT INTO farmers_kyc1 VALUES ('R9','old','row'), ('R1','stale','state')")
+      "CREATE TABLE farmers_livelihood (rsbsa_no VARCHAR(20) NOT NULL, livelihood VARCHAR(50))",
+      "CREATE TABLE farmparcelownership (parcel_id VARCHAR(20) NOT NULL, rsbsa_no VARCHAR(20) NOT NULL, encoder_agency VARCHAR(50))",
+      "CREATE TABLE farmparcel (parcel_id VARCHAR(20) NOT NULL, desc_location VARCHAR(50))")
+    exec(srcUrl, ddl ++ Seq(
+      "INSERT INTO farmers_kyc1 VALUES ('R1','juan','cruz'), ('R2','maria','santos')",
+      "INSERT INTO farmers_livelihood VALUES ('R1','farming'), ('R1','fishing'), ('R2','poultry')",
+      "INSERT INTO farmparcelownership VALUES ('P1','R1','da'), ('P2','R1','lgu'), ('P3','R2','da')",
+      "INSERT INTO farmparcel VALUES ('P1','lot a'), ('P2','lot b'), ('P3','lot c')"): _*)
+    exec(tgtUrl, ddl ++ Seq(
+      "INSERT INTO farmers_kyc1 VALUES ('R9','old','row'), ('R1','stale','state')",
+      "INSERT INTO farmers_livelihood VALUES ('R1','stale'), ('R9','old')",
+      "INSERT INTO farmparcelownership VALUES ('P9','R9','old')",
+      "INSERT INTO farmparcel VALUES ('P1','stale'), ('P9','old')"): _*)
     val run = graft.pipeline.EtlRun.onJdbc(spark, srcUrl, tgtUrl)
-    val log = Seq((1L, "R1", "farmers_kyc1")).toDF("log_id", "rsbsa_no", "table")
+    val log = Seq(
+      (1L, "R1", "farmers_kyc1"), (2L, "R1", "farmers_livelihood"),
+      (3L, "R1", "farmparcelownership"),
+    ).toDF("log_id", "rsbsa_no", "table")
     val report = run.run(log)
     assert(report.errors == 0, report.tables.map(_.error))
-    assert(report.tables.head.extracted == 1)
-    val after = Jdbc.table(spark, tgtUrl, "farmers_kyc1")
-      .as[(String, String, String)].collect().toSet
-    // R1 refreshed in place (normalized upper-case, stale row gone);
-    // untouched pre-existing R9 retained
-    assert(after == Set(("R1", "JUAN", "CRUZ"), ("R9", "old", "row")))
+    assert(report.tables.map(t => t.table -> t.extracted) == Seq(
+      "farmers_kyc1" -> 1L, "farmers_livelihood" -> 2L,
+      "farmparcelownership" -> 2L, "farmparcel" -> 2L))
+    def target(table: String) = Jdbc.table(spark, tgtUrl, table)
+      .collect().map(_.toSeq.map(String.valueOf)).toSet
+    // R1 refreshed in place (normalized upper-case, stale rows gone);
+    // untouched pre-existing R9/P9 rows retained
+    assert(target("farmers_kyc1") == Set(Seq("R1", "JUAN", "CRUZ"), Seq("R9", "old", "row")))
+    assert(target("farmers_livelihood") ==
+      Set(Seq("R1", "FARMING"), Seq("R1", "FISHING"), Seq("R9", "old")))
+    assert(target("farmparcelownership") ==
+      Set(Seq("P1", "R1", "DA"), Seq("P2", "R1", "LGU"), Seq("P9", "R9", "old")))
+    assert(target("farmparcel") ==
+      Set(Seq("P1", "LOT A"), Seq("P2", "LOT B"), Seq("P9", "old")))
   }
 
   test("JdbcReplay: offset-tracked ticks sync only rows that arrived in between (R1/R2)") {
