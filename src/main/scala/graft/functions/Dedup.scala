@@ -1489,20 +1489,12 @@ object Dedup {
     // localCheckpoint blocks are persisted RDDs (not CacheManager
     // entries — Dataset.unpersist can't free them, and waiting on
     // GC-driven ContextCleaner cleanup would let several full edge-set
-    // copies pile up over many rounds). Track the RDD ids each round's
-    // checkpoint persists and free the superseded round's explicitly.
-    // (Assumes no concurrent persists on this SparkContext between
-    // snapshots — query construction is single-threaded driver code.)
+    // copies pile up over many rounds). Each round frees exactly the
+    // RDDs backing the round it supersedes (`Materialize.rddIds`), so
+    // a checkpoint another thread takes meanwhile is never touched.
     val sc = pairs.sparkSession.sparkContext
-    var knownIds = sc.getPersistentRDDs.keySet // pre-existing: never touch
-    var prevRoundIds = Set.empty[Int]
-    def trackRound(): Unit = { // call right after a checkpoint
-      val now = sc.getPersistentRDDs.keySet
-      prevRoundIds = (now -- knownIds).toSet
-      knownIds = now
-    }
-    def freePrevRound(): Unit =
-      prevRoundIds.foreach(id =>
+    def free(round: DataFrame): Unit =
+      graft.plans.Materialize.rddIds(round).foreach(id =>
         sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
     // Order-independent edge-set signature (count + xor of pair
@@ -1526,7 +1518,6 @@ object Dedup {
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
       .distinct())
-    trackRound()
     var converged = false
     var it = 0
     while (!converged && it < maxIter) {
@@ -1568,10 +1559,8 @@ object Dedup {
         .distinct())
       converged = smallSig == edgeSig && small.except(edges).isEmpty
       // `edges` (the superseded round) was last read by the except
-      // above; its blocks are safe to drop now. The new round's ids
-      // take its place in the tracker.
-      freePrevRound()
-      trackRound()
+      // above; its blocks are safe to drop now.
+      free(edges)
       edges = small
       edgeSig = smallSig
       it += 1

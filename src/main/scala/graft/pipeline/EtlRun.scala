@@ -56,26 +56,35 @@ final class EtlRun(
     readTarget: String => DataFrame,
     writeTarget: (String, DataFrame) => Unit,
     incrementalWrite: Option[(String, DataFrame) => Unit] = None,
+    keyedRead: Option[(String, String, DataFrame) => DataFrame] = None,
 ) {
 
-  /** The extraction a table's plan runs on: keyed semi-extract, or —
-    * for `farmparcel` — the two-hop bridge extract (S5+S6/J2:
-    * farmers → ownership → parcel). Shared by the merge plan and the
-    * run report so counts describe the same rows that were merged.
+  /** Source rows of `table` whose `key` is in `keys` (a frame with a
+    * `key` column): the backend's own keyed read when it has one (a
+    * remote store takes the keys into its SQL), else a semi join of
+    * the full source read.
+    */
+  private def keyedSource(table: String, key: String, keys: DataFrame): DataFrame =
+    keyedRead match {
+      case Some(read) => read(table, key, keys)
+      case None => ChangeLog.keyedExtract(readSource(table), keys, key)
+    }
+
+  /** The extraction a table's plan runs on: keyed extract, or — for
+    * `farmparcel` — the two-hop bridge extract (S5+S6/J2: farmers →
+    * ownership → parcel), each hop a keyed read. Shared by the merge
+    * plan and the run report so counts describe the same rows that
+    * were merged.
     */
   def extractFor(log: DataFrame, table: String): DataFrame = {
-    val spec = Catalog.specFor(table)
+    val keys = ChangeLog.keysForTable(log, table)
     if (table == "farmparcel")
-      ChangeLog.twoHopExtract(
-        far = readSource("farmparcel"),
-        bridge = readSource("farmparcelownership")
-          .select("rsbsa_no", "parcel_id"),
-        keys = ChangeLog.keysForTable(log, table),
-        nearKey = "rsbsa_no", farKey = "parcel_id")
-    else
-      ChangeLog.keyedExtract(readSource(table),
-        ChangeLog.keysForTable(log, table)
-          .withColumnRenamed("rsbsa_no", spec.key), spec.key)
+      keyedSource("farmparcel", "parcel_id",
+        keyedSource("farmparcelownership", "rsbsa_no", keys).select("parcel_id"))
+    else {
+      val key = Catalog.specFor(table).key
+      keyedSource(table, key, keys.withColumnRenamed("rsbsa_no", key))
+    }
   }
 
   /** Execute a full run: every table named in the change-log, with the
@@ -215,8 +224,11 @@ object EtlRun {
   /** JDBC-backed runner — the reference's actual deployment shape
     * (MySQL source pool in, MySQL target pool out,
     * `config/db.js:5-35`): sources read through
-    * [[graft.sources.Jdbc.table]] (projection/filter pushdown into the
-    * remote SQL). The target database merges IN PLACE: only the
+    * [[graft.sources.Jdbc.keyedExtract]], so a batch's keys reach the
+    * remote SQL as an `IN` list (at most 1,000 keys; a semi join of
+    * the remote read above that) and an extract reads O(keys) rows,
+    * not the whole table — both hops of the `farmparcel` extract
+    * included. The target database merges IN PLACE: only the
     * normalized incoming rows ship, through
     * [[graft.sources.Jdbc.refresh]]'s per-partition transactional
     * delete-then-insert on the merge key — O(incoming) per run, never
@@ -239,6 +251,9 @@ object EtlRun {
       incrementalWrite = Some((name, df) =>
         graft.sources.Jdbc.refresh(df, targetUrl, name, Catalog.specFor(name).key,
           connectionProperties = options)),
+      keyedRead = Some((name, key, keys) =>
+        graft.sources.Jdbc.keyedExtract(spark, sourceUrl, name, key, keys,
+          options = options)),
     )
 
   /** Parquet-directory-backed runner (targets under `targetDir`,

@@ -30,11 +30,11 @@ import org.apache.spark.sql.Dataset
   * after `materialize()` the result is computed, its lineage is
   * truncated, and superseded rounds can be freed.
   *
-  * Callers that free superseded rounds by diffing
-  * `sc.getPersistentRDDs` (connectedComponents, hits) stay correct in
-  * durable mode: reliable checkpoints don't register persistent RDDs,
-  * so the diff is empty and the free is a no-op — retention is handed
-  * to the checkpoint-dir cleanup discipline instead.
+  * Callers that free superseded rounds by their [[rddIds]]
+  * (connectedComponents, hits) stay correct in durable mode: reliable
+  * checkpoints don't register persistent RDDs, so the free is a no-op
+  * — retention is handed to the checkpoint-dir cleanup discipline
+  * instead.
   */
 object Materialize {
 

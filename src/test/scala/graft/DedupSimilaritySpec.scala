@@ -276,6 +276,34 @@ class DedupSimilaritySpec extends SparkSpec {
     }
   }
 
+  test("connected components frees only its own rounds while another thread checkpoints") {
+    // While CC's first checkpoint job runs, a UDF in the `pairs` plan
+    // has another thread localCheckpoint a frame and waits for it. A
+    // `getPersistentRDDs` diff around that checkpoint would take the
+    // frame's RDD for CC's first round and unpersist it next round.
+    SideCheckpoint.fired.set(false)
+    SideCheckpoint.frame = null
+    val takeSideCheckpoint = udf { (a: Long) =>
+      if (SideCheckpoint.fired.compareAndSet(false, true)) {
+        val t = new Thread(() =>
+          SideCheckpoint.frame = TestSpark.spark.range(0, 50).toDF("x").localCheckpoint())
+        t.start()
+        t.join()
+      }
+      a
+    }.asNondeterministic()
+    val pairs = Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("a_id", "b_id")
+      .withColumn("a_id", takeSideCheckpoint($"a_id"))
+    val got = Dedup.connectedComponents(pairs).as[(Long, Long)].collect().toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+    val frame = SideCheckpoint.frame
+    assert(frame != null, "the side checkpoint never ran")
+    val ids = graft.plans.Materialize.rddIds(frame)
+    assert(ids.nonEmpty && ids.forall(spark.sparkContext.getPersistentRDDs.contains),
+      s"side checkpoint RDDs $ids were unpersisted")
+    assert(frame.as[Long].collect().sorted.toSeq == (0L until 50L))
+  }
+
   test("∀ r ∈ {1,3,7,15}: bandedHammingPairs ≡ all-pairs on random 64-bit sets") {
     // the pigeonhole argument must hold for EVERY radius, not just the
     // media queries' r = 10 — band widths change with r (64/(r+1)
@@ -2105,4 +2133,12 @@ class DedupSimilaritySpec extends SparkSpec {
       .as[(Long, Int, Long, Double, Double)].collect()
     assert(got.nonEmpty && got.forall(r => r._4 < r._5))
   }
+}
+
+/** What the concurrent-checkpoint spec's UDF shares with the test body:
+  * tasks run in the test JVM (local mode), so both see this object.
+  */
+object SideCheckpoint {
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+  @volatile var frame: org.apache.spark.sql.DataFrame = _
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's recommended-configuration contract (`GraftSession`):
@@ -18,6 +19,7 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(c("spark.sql.files.maxPartitionBytes") == (128L << 20).toString)
     assert(c("spark.sql.session.timeZone") == "UTC")
     assert(c("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    assert(c("spark.sql.codegen.cache.maxEntries") == "1024")
   }
 
   test("recommended conf: rejects degenerate inputs") {
@@ -45,5 +47,25 @@ class GraftSessionSpec extends AnyFunSuite {
     } finally {
       TestSpark.spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
     }
+  }
+
+  test("the recipe's codegen cache holds a repeating cycle: its second pass compiles almost nothing") {
+    // Spark's compiled-class cache is an LRU of 100 entries by
+    // default; a cycle of more classes than that never hits, so every
+    // pass recompiles every class. Every compile is one sample of
+    // CodegenMetrics.METRIC_COMPILATION_TIME.
+    val spark = TestSpark.spark
+    val cycle = Seq("dedup_apss_cosine", "text_kn5_score", "er_golden_record")
+    def compiles(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      cycle.foreach(q => SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+        .write.format("noop").mode("overwrite").save())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = compiles()
+    val second = compiles()
+    info(s"compiles: first pass $first, second pass $second")
+    assert(first > 100, s"the cycle must outgrow Spark's default 100 entries (first pass $first)")
+    assert(second * 10 <= first, s"first pass $first, second pass $second")
   }
 }

@@ -133,6 +133,43 @@ class JdbcSpec extends SparkSpec {
       Set(Seq("P1", "LOT A"), Seq("P2", "LOT B"), Seq("P9", "old")))
   }
 
+  test("onJdbc extracts push the batch keys into the remote SQL, both farmparcel hops included") {
+    val srcUrl = freshDb()
+    exec(srcUrl,
+      "CREATE TABLE farmers_kyc1 (rsbsa_no VARCHAR(20) NOT NULL, first_name VARCHAR(50))",
+      "CREATE TABLE farmparcelownership (parcel_id VARCHAR(20) NOT NULL, rsbsa_no VARCHAR(20) NOT NULL)",
+      "CREATE TABLE farmparcel (parcel_id VARCHAR(20) NOT NULL, desc_location VARCHAR(50))",
+      "INSERT INTO farmers_kyc1 VALUES ('R1','juan'), ('R2','maria'), ('R3','jose')",
+      "INSERT INTO farmparcelownership VALUES ('P1','R1'), ('P2','R1'), ('P3','R2'), ('P4','R3')",
+      "INSERT INTO farmparcel VALUES ('P1','lot a'), ('P2','lot b'), ('P3','lot c'), ('P4','lot d')")
+    val run = graft.pipeline.EtlRun.onJdbc(spark, srcUrl, freshDb())
+    val log = graft.pipeline.EtlRun.cascadeLog(Seq(
+      (1L, "R1", "farmers_kyc1"), (2L, "R2", "farmers_kyc1"),
+      (3L, "R1", "farmparcelownership"), (4L, "R2", "farmparcelownership"),
+      (5L, "R9", "farmparcelownership"),
+    ).toDF("log_id", "rsbsa_no", "table"))
+    def pushedIn(df: org.apache.spark.sql.DataFrame, key: String): Boolean = {
+      val plan = df.queryExecution.executedPlan.toString
+      s"(?is)PushedFilters: \\[[^\\]]*\\bIn\\($key,".r.findFirstIn(plan).isDefined &&
+        !plan.contains("Join")
+    }
+    val kyc1 = run.extractFor(log, "farmers_kyc1")
+    assert(pushedIn(kyc1, "rsbsa_no"), kyc1.queryExecution.executedPlan.toString)
+    assert(kyc1.select("rsbsa_no").as[String].collect().sorted.toSeq == Seq("R1", "R2"))
+    // hop 1 reads the ownership rows of R1, R2 and R9; hop 2 the parcels
+    // they name
+    val ownership = run.extractFor(log, "farmparcelownership")
+    assert(pushedIn(ownership, "rsbsa_no"), ownership.queryExecution.executedPlan.toString)
+    val parcels = run.extractFor(log, "farmparcel")
+    assert(pushedIn(parcels, "parcel_id"), parcels.queryExecution.executedPlan.toString)
+    assert(parcels.select("parcel_id").as[String].collect().sorted.toSeq ==
+      Seq("P1", "P2", "P3"))
+    // a batch whose owners hold no parcel extracts none
+    val none = graft.pipeline.EtlRun.cascadeLog(
+      Seq((1L, "R9", "farmparcelownership")).toDF("log_id", "rsbsa_no", "table"))
+    assert(run.extractFor(none, "farmparcel").count() == 0)
+  }
+
   test("JdbcReplay: offset-tracked ticks sync only rows that arrived in between (R1/R2)") {
     val srcUrl = freshDb()
     val tgtUrl = freshDb()

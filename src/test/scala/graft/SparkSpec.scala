@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM-wide SparkSession). */
+/** Shared session for all suites (one JVM-wide SparkSession), built
+  * by [[GraftSession.local]] so the specs run the engine's recipe: the
+  * codegen cache, AQE and scan settings production runs.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4, appName = "graft-test")
     s.sparkContext.setLogLevel("WARN")
     s
   }

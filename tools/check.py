@@ -5,6 +5,7 @@ tables and compare result sets (columns sorted by name, rows sorted,
 exact value equality). Dev tooling only — not part of the library.
 
 Usage: python3 tools/check.py [sf_dir] [--skip-verify] [names...]
+Verify runs at SPARK_GRAFT_CPUS cores, default `nproc`.
 """
 import json, math, os, subprocess, sys
 
@@ -31,7 +32,10 @@ def run_verify():
         "-Xmx8g", "-Dspark.ui.enabled=false",
         "-Dspark.sql.session.timeZone=UTC",
         "-cp", cp, "graft.Verify", SF, OUT] + ONLY
-    env = dict(os.environ, SPARK_GRAFT_CPUS="8")
+    # Verify runs at the caller's width: SPARK_GRAFT_CPUS, else every
+    # core this process may run on (what `nproc` prints)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS=cpus)
     r = subprocess.run(cmd, capture_output=True, text=True, env=env)
     for line in r.stderr.splitlines():
         if "[verify]" in line or "Exception" in line:
