@@ -190,13 +190,10 @@ object Queries {
     Readers.validChangeLog(s, dir).select("rsbsa_no").distinct()
 
   /** A6/W5 — latest log entry per key (replay "last write wins"). */
-  val a6LatestWins: Q = (s, dir) => {
-    val w = Window.partitionBy(col("rsbsa_no")).orderBy(col("log_id").desc)
-    Readers.validChangeLog(s, dir)
-      .select("log_id", "rsbsa_no", "table")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-  }
+  val a6LatestWins: Q = (s, dir) =>
+    Merge.latestPerKey(
+      Readers.validChangeLog(s, dir).select("log_id", "rsbsa_no", "table"),
+      "rsbsa_no", "log_id")
 
   /** W1/W3 — last-100 newest-first with a unique total order. */
   val w3Top100: Q = (s, dir) =>

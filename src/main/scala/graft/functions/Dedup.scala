@@ -301,11 +301,10 @@ object Dedup {
     * EAGERLY materialized with every internal checkpoint already
     * freed — a long-lived stream leaks nothing per batch beyond the
     * result it hands the caller (free via
-    * [[graft.plans.Materialize.rddIds]] when done).
+    * [[graft.plans.Materialize.free]] when done).
     */
   def ingestScreenPairs(deltaArrs: DataFrame, historyArrs: DataFrame,
       threshold: Double = 0.5): DataFrame = {
-    val sc = deltaArrs.sparkSession.sparkContext
     val (arrs, tot) = meteredCheckpoint(
       deltaArrs.select(col("doc_id"), col("shingles"))
         .withColumn("__delta", lit(true))
@@ -318,8 +317,7 @@ object Dedup {
         col("inter"), col("jaccard"))
       .materialize()
     freePrefix()
-    graft.plans.Materialize.rddIds(arrs).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+    graft.plans.Materialize.free(arrs, blocking = false)
     out
   }
 
@@ -337,7 +335,6 @@ object Dedup {
     */
   private def crossPairsFrom(arrs: DataFrame, threshold: Double,
       withinDelta: Boolean, totalShingles: Long): (DataFrame, () => Unit) = {
-    val sc = arrs.sparkSession.sparkContext
     val ex = arrs
       .select(col("doc_id"), col("__delta"),
         size(col("shingles")).cast("long").as("n_sh"),
@@ -372,8 +369,7 @@ object Dedup {
           .dropDuplicates("a_id", "b_id")
       else verifyPairs(sh, matched.distinct(), threshold)
     (verified,
-      () => graft.plans.Materialize.rddIds(prefix).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))))
+      () => graft.plans.Materialize.free(prefix, blocking = false))
   }
 
   /** Prefix-filtered exact-Jaccard pairs from a PRE-MATERIALIZED
@@ -1490,12 +1486,8 @@ object Dedup {
     // entries — Dataset.unpersist can't free them, and waiting on
     // GC-driven ContextCleaner cleanup would let several full edge-set
     // copies pile up over many rounds). Each round frees exactly the
-    // RDDs backing the round it supersedes (`Materialize.rddIds`), so
+    // RDDs backing the round it supersedes (`Materialize.free`), so
     // a checkpoint another thread takes meanwhile is never touched.
-    val sc = pairs.sparkSession.sparkContext
-    def free(round: DataFrame): Unit =
-      graft.plans.Materialize.rddIds(round).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
 
     // Order-independent edge-set signature (count + xor of pair
     // hashes), collected as an `observe` metric DURING the checkpoint
@@ -1560,7 +1552,7 @@ object Dedup {
       converged = smallSig == edgeSig && small.except(edges).isEmpty
       // `edges` (the superseded round) was last read by the except
       // above; its blocks are safe to drop now.
-      free(edges)
+      graft.plans.Materialize.free(edges, blocking = false)
       edges = small
       edgeSig = smallSig
       it += 1

@@ -275,10 +275,6 @@ object Similarity {
     require(k >= 1, "k must be >= 1")
     val spark = embeddings.sparkSession
     graft.plans.GraftFunctions.register(spark)
-    val sc = spark.sparkContext
-    def free(df: DataFrame): Unit =
-      graft.plans.Materialize.rddIds(df).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     val quant = embeddings.select(
       col("vec_id"), quantized(col("embedding")).as("q"),
     ).withColumn("nsq", call_function("graft_norm_sq", col("q")))
@@ -315,15 +311,15 @@ object Similarity {
                 .select(col("vec_id"), col("q"), col("nsq"),
                   least(col("d"), distToCenter).as("d"))
                 .materialize()
-              free(state)
+              graft.plans.Materialize.free(state, blocking = false)
               state = next
             }
             rank += 1
         }
       }
-      free(state)
+      graft.plans.Materialize.free(state, blocking = false)
     }
-    free(quant)
+    graft.plans.Materialize.free(quant, blocking = false)
     import spark.implicits._
     picked.toSeq.toDF("rank", "vec_id", "dist_sq")
   }

@@ -1,4 +1,5 @@
 package graft.operators
+import graft.plans.Materialize
 import graft.plans.Materialize.MaterializeOps
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -84,12 +85,12 @@ object Graphs {
     val seed = seeds.select(col(seeds.columns(0)).as("node")).distinct()
       .materialize()
     var gens: List[Set[Int]] = Nil
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     def ckpt(df: DataFrame): DataFrame = {
       val ck = df.materialize()
-      val g = graft.plans.Materialize.rddIds(ck) :: gens
-      gens = if (g.size > 1) { free(g.last); g.init } else g
+      val g = Materialize.rddIds(ck) :: gens
+      gens = if (g.size > 1) {
+        Materialize.free(sc, g.last, blocking = false); g.init
+      } else g
       ck
     }
     var ranks = seed.withColumn("r", lit(r0))
@@ -107,8 +108,8 @@ object Graphs {
       if (i % 5 == 0 && i < iters) ranks = ckpt(ranks)
     }
     val out = ranks.materialize()
-    free(gens.flatten.toSet)
-    free(graft.plans.Materialize.rddIds(seed))
+    Materialize.free(sc, gens.flatten.toSet, blocking = false)
+    Materialize.free(seed, blocking = false)
     e.unpersist(blocking = false)
     out
   }
@@ -154,12 +155,12 @@ object Graphs {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val teleport = 15L * r0 / 100L
     var gens: List[Set[Int]] = Nil // newest first; keep 1 live
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     def ckpt(df: DataFrame): DataFrame = {
       val ck = df.materialize()
-      val g = graft.plans.Materialize.rddIds(ck) :: gens
-      gens = if (g.size > 1) { free(g.last); g.init } else g
+      val g = Materialize.rddIds(ck) :: gens
+      gens = if (g.size > 1) {
+        Materialize.free(sc, g.last, blocking = false); g.init
+      } else g
       ck
     }
     var ranks = e.select(col("src").as("node")).distinct()
@@ -176,7 +177,8 @@ object Graphs {
           (lit(teleport) + expr("(85 * s) div 100")).as("r"))
       if (i % 5 == 0 && i < iters) ranks = ckpt(ranks)
     }
-    (prev, ranks, e, () => free(gens.flatten.toSet))
+    (prev, ranks, e,
+      () => Materialize.free(sc, gens.flatten.toSet, blocking = false))
   }
 
   /** Convergence certificate for fixed-iteration [[pageRank]] (the
@@ -265,19 +267,9 @@ object Graphs {
     // checkpoints, the node universe and the edge cache are no longer
     // reachable.
     freeLoop()
-    freeIds(nodes)
+    Materialize.free(nodes, blocking = false)
     e.unpersist(blocking = false)
     out
-  }
-
-  /** Free a materialized frame's own backing RDD blocks (its
-    * LogicalRDD leaves — safe alongside concurrent plans, no global
-    * diffing).
-    */
-  private def freeIds(df: DataFrame, blocking: Boolean = false): Unit = {
-    val sc = df.sparkSession.sparkContext
-    graft.plans.Materialize.rddIds(df).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking)))
   }
 
   /** The HITS half-step engine shared by [[hits]] and [[hitsReport]]:
@@ -310,10 +302,8 @@ object Graphs {
     // node universe from `e` (one single-consumer explode pass) before
     // entering the loop, so the separate count() warm-up job round 10
     // added is gone (round 15)
-    def free(ids: Set[Int]): Unit = ids.foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
     def ckptMaxed(df: DataFrame, scoreCol: String): (DataFrame, Long) = {
-      val (ck, m) = graft.plans.Materialize.withMetrics(df,
+      val (ck, m) = Materialize.withMetrics(df,
         max(col(scoreCol)).as("m"))
       // empty raw table (edge-less graph): any nonzero divisor works,
       // the rescale projects zero rows
@@ -323,7 +313,9 @@ object Graphs {
     var hGens: List[Set[Int]] = Nil
     def push(gens: List[Set[Int]], ids: Set[Int]): List[Set[Int]] = {
       val g = ids :: gens
-      if (g.size > keepGens) { free(g.last); g.init } else g
+      if (g.size > keepGens) {
+        Materialize.free(sc, g.last, blocking = false); g.init
+      } else g
     }
     var hub = nodes.withColumn("h", lit(r0))
     var auth: DataFrame = null
@@ -335,18 +327,18 @@ object Graphs {
       val (araw, am) = ckptMaxed(
         e.join(hub, e("src") === hub("node"))
           .groupBy(col("dst")).agg(sum(col("h")).as("ar")), "ar")
-      aGens = push(aGens, graft.plans.Materialize.rddIds(araw))
+      aGens = push(aGens, Materialize.rddIds(araw))
       auth = araw.select(col("dst").as("node"),
         expr(s"(ar * $r0) div ${am}L").as("a"))
       val (hraw, hm) = ckptMaxed(
         e.join(auth, e("dst") === auth("node"))
           .groupBy(col("src")).agg(sum(col("a")).as("hr")), "hr")
-      hGens = push(hGens, graft.plans.Materialize.rddIds(hraw))
+      hGens = push(hGens, Materialize.rddIds(hraw))
       hub = hraw.select(col("src").as("node"),
         expr(s"(hr * $r0) div ${hm}L").as("h"))
     }
     (hubPrev, authPrev, hub, auth,
-      () => { free(aGens.flatten.toSet); free(hGens.flatten.toSet) })
+      () => Materialize.free(sc, (aGens ++ hGens).flatten.toSet, blocking = false))
   }
 
   /** Convergence certificate for fixed-iteration [[hits]]: one row
@@ -383,7 +375,7 @@ object Graphs {
       .filter(col("hub") =!= col("phub") || col("auth") =!= col("pauth"))
       .count()
     freeLoop()
-    freeIds(nodes)
+    Materialize.free(nodes, blocking = false)
     e.unpersist(blocking = false)
     certRow(edges, "hits", iters, changed)
   }
@@ -649,11 +641,11 @@ object Graphs {
       .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
 
   /** Shared observe-count-on-materialization step (the
-    * [[graft.plans.Materialize.withMetrics]] pattern): row count rides
+    * [[Materialize.withMetrics]] pattern): row count rides
     * on the checkpoint job — zero extra jobs for loop bookkeeping.
     */
   private def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-    val (ck, m) = graft.plans.Materialize.withMetrics(df,
+    val (ck, m) = Materialize.withMetrics(df,
       count(lit(1)).as("n"))
     (ck, m("n").asInstanceOf[Long])
   }
@@ -778,12 +770,12 @@ object Graphs {
         .join(jump, col("f1") === col("jn"), "left")
         .select(col("node"), col("f"),
           least(col("f1"), coalesce(col("jf"), col("f1"))).as("nf"))
-      val (ck, m) = graft.plans.Materialize.withMetrics(
+      val (ck, m) = Materialize.withMetrics(
         stepped.select(col("node"), col("nf").as("__nf"),
           (col("nf") < col("f")).as("__chg")),
         sum(when(col("__chg"), 1L).otherwise(0L)).as("c"))
       changed = Option(m("c")).fold(0L)(_.asInstanceOf[Long])
-      freeIds(f, blocking = true)
+      Materialize.free(f, blocking = true)
       f = ck.select(col("node"), col("__nf").as("f"))
     }
     f
@@ -891,7 +883,7 @@ object Graphs {
       val el = e0.as[(Long, Long)].collect()
       val out = spark.createDataFrame(tarjanScc(el).toSeq)
         .toDF("node", "scc")
-      freeIds(e0)
+      Materialize.free(e0, blocking = false)
       return out
     }
     var nodes = e0.select(col("src").as("node"))
@@ -915,7 +907,7 @@ object Graphs {
         nodes, maxIter)
       val lbl = f.join(b.select(col("node"), col("f").as("b")),
         Seq("node")).materialize()
-      freeIds(f, blocking = true); freeIds(b, blocking = true)
+      Materialize.free(f, blocking = true); Materialize.free(b, blocking = true)
       owned ::= lbl
       settledParts ::= lbl.filter(col("f") === col("b"))
         .select(col("node"), col("f").as("scc"))
@@ -938,7 +930,7 @@ object Graphs {
     if (settledParts.isEmpty) // edge-less input: empty graph, empty out
       return e0.select(col("src").as("node"), col("dst").as("scc")).limit(0)
     val out = settledParts.reduce(_ unionAll _).materialize()
-    owned.foreach(freeIds(_))
+    owned.foreach(Materialize.free(_, blocking = false))
     out
   }
 }

@@ -6,6 +6,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
+import graft.Verify.jstr
+
 /** HTTP control surface over [[EtlScheduler]] — the engine analogue of
   * the reference's Express app (`index.js:46-355`), on the JDK's
   * built-in `HttpServer` (no dependencies; this is control plane only —
@@ -50,16 +52,6 @@ final class ControlServer(
   def boundPort: Int = server.getAddress.getPort
 
   // ------------------------------------------------------------- helpers
-
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case c if c < ' ' => " "
-      case c => c.toString
-    } + "\""
 
   private def jfield(v: Any): String = v match {
     case null | None => "null"

@@ -30,7 +30,7 @@ import org.apache.spark.sql.Dataset
   * after `materialize()` the result is computed, its lineage is
   * truncated, and superseded rounds can be freed.
   *
-  * Callers that free superseded rounds by their [[rddIds]]
+  * Callers that free superseded rounds through [[free]]
   * (connectedComponents, hits) stay correct in durable mode: reliable
   * checkpoints don't register persistent RDDs, so the free is a no-op
   * — retention is handed to the checkpoint-dir cleanup discipline
@@ -82,6 +82,18 @@ object Materialize {
     ds.queryExecution.logical.collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }.toSet
+
+  /** Free a materialized dataset's own blocks (its [[rddIds]]) and
+    * nothing else, so a checkpoint another thread holds is never
+    * touched. `blocking` waits for the block removals to finish.
+    */
+  def free[T](ds: Dataset[T], blocking: Boolean): Unit =
+    free(ds.sparkSession.sparkContext, rddIds(ds), blocking)
+
+  /** [[free]] by ids a caller collected earlier with [[rddIds]]. */
+  def free(sc: org.apache.spark.SparkContext, ids: Set[Int],
+      blocking: Boolean): Unit =
+    ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking)))
 
   /** Postfix syntax: `df.materialize()` reads like the
     * `localCheckpoint()` calls it replaces.

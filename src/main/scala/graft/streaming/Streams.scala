@@ -1077,11 +1077,6 @@ object Streams {
   ): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        def free(df: DataFrame): Unit =
-          graft.plans.Materialize.rddIds(df).foreach(rid =>
-            spark.sparkContext.getPersistentRDDs.get(rid)
-              .foreach(_.unpersist(false)))
         val canon = graft.functions.Normalize.canonicalUrl(col("url"))
         val keyed = batch.select(col("doc_id"), col("url"),
           canon.as("canon_url"),
@@ -1101,7 +1096,7 @@ object Streams {
           survivors.select(col("canon_key")), s"$statePath/b$batchId")
         onSurvivors(survivors.select(col("doc_id"), col("url"),
           col("canon_url"), col("canon_key")))
-        free(survivors)
+        graft.plans.Materialize.free(survivors, blocking = false)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -1177,10 +1172,6 @@ object Streams {
           onAdmitted(
             spark.read.parquet(s"$statePath/admitted/b$batchId"))
         } else {
-          def free(df: DataFrame): Unit =
-            graft.plans.Materialize.rddIds(df).foreach(rid =>
-              spark.sparkContext.getPersistentRDDs.get(rid)
-                .foreach(_.unpersist(false)))
           val canon = graft.functions.Normalize.canonicalUrl(col("url"))
           val keyed = batch.select(col("doc_id"), col("url"),
             canon.as("canon_url"),
@@ -1253,7 +1244,8 @@ object Streams {
             keptNow.withColumn("__bid", lit(batchId)), countersPath)
           onAdmitted(admitted.select(col("doc_id"), col("url"),
             col("canon_url"), col("canon_key"), col("host")))
-          free(admitted); free(counters); free(fresh)
+          Seq(admitted, counters, fresh)
+            .foreach(graft.plans.Materialize.free(_, blocking = false))
         }
         ()
       }
@@ -1299,10 +1291,6 @@ object Streams {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         graft.plans.GraftFunctions.register(spark)
-        def free(df: DataFrame): Unit =
-          graft.plans.Materialize.rddIds(df).foreach(id =>
-            spark.sparkContext.getPersistentRDDs.get(id)
-              .foreach(_.unpersist(false)))
         // one kernel pass shingles the batch; the table serves the
         // screen AND becomes this batch's history increment
         val arrs = graft.plans.Materialize(
@@ -1318,8 +1306,8 @@ object Streams {
         graft.operators.Merge.atomicOverwrite(
           arrs.select("doc_id", "shingles"), s"$statePath/b$batchId")
         onPairs(pairs)
-        free(pairs)
-        free(arrs)
+        graft.plans.Materialize.free(pairs, blocking = false)
+        graft.plans.Materialize.free(arrs, blocking = false)
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -56,29 +56,37 @@ class DriverContractSpec extends AnyFunSuite {
     assert(mains.sorted == List("Bench", "Verify"), mains)
   }
 
-  test("priorRaw: reads the raw queries map, rejects a different-SF prior") {
-    // the phantom re-run pass compares against the PREVIOUS run's raw
-    // seconds — but only when that run was at the same scale factor;
-    // a prior at another SF would flag (or mask) every query
-    val f = java.nio.file.Files.createTempFile("graft-bench", ".json")
-    val line = """{"metric":"total","value":1.0,"unit":"sec",""" +
-      """"sf":"/root/testdata/sf0.1","queries_norm":{"q_a":9.0},""" +
-      """"queries":{"q_a":1.25,"q_b":-1.0}}"""
-    java.nio.file.Files.write(f, line.getBytes("UTF-8"))
-    val same = Bench.priorRaw(f.toString, "/root/testdata/sf0.1")
-    assert(same == Map("q_a" -> 1.25, "q_b" -> -1.0)) // raw map, not norm
-    assert(Bench.priorRaw(f.toString, "/root/testdata/sf0.01").isEmpty)
-    assert(Bench.priorRaw("/nonexistent/bench.json", "x").isEmpty)
-    // fields appended AFTER the raw map must not leak into it (the old
-    // first-'}' scan would have been fine here, but a nested value
-    // inside the map would truncate it — pin the depth-tracked scan)
-    val line2 = """{"sf":"/root/testdata/sf0.1",""" +
-      """"queries":{"q_a":1.25,"q_{weird}":2.5},""" +
-      """"extra":{"q_z":9.0}}"""
-    java.nio.file.Files.write(f, line2.getBytes("UTF-8"))
-    assert(Bench.priorRaw(f.toString, "/root/testdata/sf0.1") ==
-      Map("q_a" -> 1.25, "q_{weird}" -> 2.5))
-    java.nio.file.Files.delete(f)
+  test("the bench line parses, carries the contract's fields, and escapes error text") {
+    import com.fasterxml.jackson.databind.ObjectMapper
+    import scala.jdk.CollectionConverters._
+    val mapper = new ObjectMapper()
+    val results = Seq("q_a" -> 1.25, "q_b" -> -1.0, "q_c" -> 0.5)
+    val msg = "AnalysisException: col \"x\" in C:\\tmp\tnot found\nline 2"
+    val (line, record) = Bench.report("/data/sf0.01", 2.0, 3.0, results,
+      Seq("q_b" -> msg))
+    val j = mapper.readTree(line)
+    for (f <- Seq("metric", "value", "unit", "canary_s", "value_norm", "sf",
+        "n_queries", "queries_file", "slowest"))
+      assert(j.has(f), s"bench line lacks $f: $line")
+    assert(!j.has("phantoms") && !j.has("canary_io_s"), line)
+    assert(j.get("value").asDouble == 1.75)
+    assert(j.get("value_norm").asDouble == 0.7) // 1.75 / mean(2, 3)
+    assert(j.get("sf").asText == "/data/sf0.01")
+    assert(j.get("n_queries").asInt == 3)
+    assert(j.get("queries_file").asText == "bench_out.json")
+    assert(j.get("slowest").fieldNames.asScala.toList == List("q_a", "q_c"))
+    // the error message round-trips exactly: quote, backslash, tab, newline
+    assert(j.get("errors").get("q_b").asText == msg)
+    // the record is the line plus the full maps, raw seconds last
+    val r = mapper.readTree(record)
+    assert(r.get("queries").fieldNames.asScala.toList == List("q_a", "q_b", "q_c"))
+    assert(r.get("queries").get("q_b").asDouble == -1.0)
+    assert(r.get("queries_norm").get("q_a").asDouble == 0.5)
+    assert(record.lastIndexOf("\"queries\":") > record.indexOf("\"queries_norm\":"))
+    // errors ride only when a query failed
+    val clean = mapper.readTree(Bench.report("/data/sf0.01", 2.0, 3.0,
+      Seq("q_a" -> 1.25), Nil)._1)
+    assert(!clean.has("errors"))
   }
 
   test("every oracle key names a registered query") {
