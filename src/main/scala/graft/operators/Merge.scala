@@ -91,10 +91,12 @@ object Merge {
     if (exists) deleteRecursive(Paths.get(old))
   }
 
-  private def deleteRecursive(p: java.nio.file.Path): Unit = {
+  private[graft] def deleteRecursive(p: java.nio.file.Path): Unit = {
     import java.nio.file.Files
-    if (Files.isDirectory(p))
-      Files.list(p).forEach(deleteRecursive)
+    if (Files.isDirectory(p)) {
+      val children = Files.list(p)
+      try children.forEach(deleteRecursive) finally children.close()
+    }
     Files.deleteIfExists(p)
   }
 

@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *      tick's cost is O(new rows), never O(log);
   *   3. snapshot the batch's upper bound (max log_id) and re-bound the
   *      scan with `log_id <= hi`: [[EtlRun.run]] executes several jobs
-  *      over the batch (count, table list, per-table extracts), and
-  *      rows INSERTED CONCURRENTLY by the source application must not
-  *      straddle them half-processed — they belong to the next tick;
+  *      over the batch (one aggregate for the counts and the table
+  *      list, then one job per table), and rows INSERTED CONCURRENTLY
+  *      by the source application must not straddle them
+  *      half-processed — they belong to the next tick;
   *   4. run the full per-table merge lifecycle on the bounded batch;
   *   5. advance the mark only when every table merged cleanly —
   *      otherwise the whole batch replays next tick. At-least-once is

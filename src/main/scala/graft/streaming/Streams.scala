@@ -21,6 +21,26 @@ import org.apache.spark.sql.Row
   *
   * Event-time windows + watermarks are the engine's extension beyond
   * the reference's processing-time-only model (SURVEY §2.8 note).
+  *
+  * Replay rule. `foreachBatch` is at-least-once: a crash after a
+  * batch wrote its state but before the checkpoint recorded the batch
+  * runs the same batchId over the same input again. Every stream that
+  * keeps state under a `statePath` is therefore written so that a
+  * batch reads only state that batches BEFORE it committed, and writes
+  * its own result under `b<batchId>`:
+  *   - bounded state (counts, top-k, a reservoir, drift references,
+  *     fingerprint sets) is a SNAPSHOT: the batch reads the newest
+  *     `b<bid>` with bid < batchId ([[priorSnapshot]]) and commits the
+  *     next one ([[commitSnapshot]]), which then deletes the snapshots
+  *     older than the one it read;
+  *   - corpus-sized history (seen URL keys, shingle tables) is
+  *     APPEND-ONLY: each batch writes only its own increment and reads
+  *     every committed one ([[committedBatchDirs]]), so per-batch state
+  *     I/O is O(batch), never O(corpus).
+  * A replayed batch thus recomputes from the same inputs: it commits
+  * the same state and emits the same rows. The reference's keyed
+  * delete-then-insert sync is idempotent in the same way
+  * (`services/etlService.js:85-115`).
   */
 object Streams {
 
@@ -359,7 +379,8 @@ object Streams {
     * 16 bytes/doc, never the text — and the per-batch work is
     * O(batch × bucket-collisions), exactly the batch operator's
     * shape applied incrementally. Deterministic: earlier-arriving
-    * (lower-doc_id-within-batch) documents win.
+    * (lower-doc_id-within-batch) documents win. The fingerprint set is
+    * a snapshot under the replay rule ([[Streams]]).
     */
   def nearDupFreeStream(
       docs: DataFrame,
@@ -369,13 +390,11 @@ object Streams {
       maxHamming: Int = 3,
   ): StreamingQuery =
     docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val fps = graft.functions.Dedup.simHashTable(batch)
-        val state =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(statePath)))
-            spark.read.parquet(statePath)
-          else fps.limit(0)
+        val state = priorSnapshot(spark, statePath, batchId)
+          .getOrElse(fps.limit(0))
         def chunked(df: DataFrame, side: String) =
           df.select(col("doc_id").as(s"${side}_id"), col("fp").as(s"${side}_fp"),
             explode(array((0 until 4).map(i =>
@@ -401,44 +420,13 @@ object Streams {
         // the in-batch comparison, and it suppresses future members of
         // an already-seen duplicate cluster even when their nearest
         // neighbor was itself dropped
-        graft.operators.Merge.atomicOverwrite(state.unionByName(fps), statePath)
+        commitSnapshot(state.unionByName(fps), statePath, batchId)
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
 
-  /** Streaming semantic dedup — the embedding-side complement of
-    * [[nearDupFreeStream]] and the incremental face of
-    * [[graft.functions.Similarity.semanticDedup]] (SemDeDup, Abbas et
-    * al. 2023): each micro-batch of `(vec_id, embedding)` rows is
-    * k-means-assigned to its nearest cell of the FIXED `centroids`
-    * (map-only, centroids ride as literals), candidate-matched by
-    * exact quantized-integer cosine against the accumulated state AND
-    * earlier rows of the same batch — candidates exist only WITHIN a
-    * cell, the same blocking scheme as the batch operator — and only
-    * semantically novel vectors are emitted. Every seen vector's
-    * quantized form appends to the state table (dropped ones too), so
-    * future members of an already-seen cluster are suppressed even
-    * when their nearest neighbor was itself dropped.
-    *
-    * Dedup rule is greedy earlier-wins (lower `vec_id` within a batch,
-    * arrival order across batches). Relation to the batch operator's
-    * connected-components survivors on the same chronological corpus:
-    * the streamed DROP set is always a SUBSET of the batch flagged set
-    * (a vector with an earlier similar neighbor is never its
-    * component's minimum), and the two are EQUAL whenever each
-    * duplicate group is pairwise-similar — the tight-cluster regime
-    * SemDeDup targets. Chains (A~B~C, A≁C) can keep one more survivor
-    * here than batch CC; spec-asserted both ways.
-    *
-    * Centroids must be stable across batches (train once — e.g.
-    * [[graft.functions.Similarity.trainedCentroids]] on a bootstrap
-    * sample — then pin); re-training mid-stream would silently change
-    * the blocking and lose cross-batch candidates. State is
-    * `(vec_id, cell, q, nsq)` — dim×8 bytes per vector, never raw
-    * text/media — and per-batch compare cost is Σ_cell |batch∩cell| ×
-    * |seen∩cell| via a hash equi-join on the cell id, never batch×N.
-    */
   /** Streaming heavy-hitter sketch — the streaming face of
     * [[graft.functions.TextAnalysis.cmsHeavyHitterSketch]]: the SAME
     * per-occurrence CMS rows + sampled-candidate rows, as a native
@@ -477,9 +465,9 @@ object Streams {
     * the running totals. The callback receives the accumulated
     * funnel table after each batch; feeding the corpus through in
     * doc_id-ordered batches reproduces the batch `curationFunnel`
-    * EXACTLY (spec-pinned). State: the seen-keys digest table +
-    * one counts row, persisted with the [[driftStream]]
-    * atomic-overwrite discipline.
+    * EXACTLY (spec-pinned). State: the seen-keys digest table under
+    * `statePath/keys` + one counts row under `statePath/counts`, both
+    * snapshots under the replay rule ([[Streams]]).
     */
   def funnelStream(
       docs: DataFrame,
@@ -500,11 +488,8 @@ object Streams {
           c.as(s"f$i") }
         val flagged = batch.select(
           (col("doc_id") +: screenCols) :+ dedupStage._2.as("__key"): _*)
-        val hasKeys =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(keysPath))
-        val seen =
-          if (hasKeys) spark.read.parquet(keysPath)
-          else flagged.select(col("__key")).limit(0)
+        val seen = priorSnapshot(spark, keysPath, batchId)
+          .getOrElse(flagged.select(col("__key")).limit(0))
         // first GLOBALLY = first within the batch (by doc_id) AND the
         // key never appeared in any prior batch
         val withFirst = flagged
@@ -515,40 +500,19 @@ object Streams {
             Seq("__key"), "left")
           .withColumn(s"f${k - 1}",
             col("__rk") === 1 && col("__seen").isNull)
-        val (prior, lastBid): (Array[Long], Long) =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(countsPath))) {
-            val p = spark.read.parquet(countsPath)
-            // a counts file written before the __bid replay guard
-            // existed lacks the column — treat it as "no batch applied
-            // yet" (-1) instead of failing the first post-upgrade batch
-            val bid = if (p.columns.contains("__bid")) col("__bid")
-              else lit(-1L).as("__bid")
-            val r = p.select((0 to k).map(i => col(s"n$i")) :+ bid: _*)
-              .head()
-            ((0 to k).map(r.getLong).toArray, r.getLong(k + 1))
-          } else (Array.fill(k + 1)(0L), -1L)
-        // foreachBatch is at-least-once: a crash between the counts
-        // commit below and the streaming checkpoint commit replays this
-        // batch — the persisted __bid detects the replay and the merge
-        // is SKIPPED (the keys overwrite stays idempotent: re-unioning
-        // the same batch's keys through distinct adds nothing), so the
-        // per-stage counts are effectively exactly-once.
-        val merged: Seq[Long] =
-          if (lastBid == batchId) (0 to k).map(prior)
-          else {
-            val batchRow = graft.functions.TextAnalysis
-              .funnelAgg(withFirst, k).head()
-            (0 to k).map(i => prior(i) + batchRow.getLong(i))
-          }
+        val prior = priorSnapshot(spark, countsPath, batchId).map(_.head())
+        val batchRow = graft.functions.TextAnalysis
+          .funnelAgg(withFirst, k).head()
+        val merged = (0 to k).map(i =>
+          prior.fold(0L)(_.getLong(i)) + batchRow.getLong(i))
         import spark.implicits._
         val one = Seq(merged).toDF().select(
           (0 to k).map(i => col("value").getItem(i).as(s"n$i")): _*)
         onFunnel(graft.functions.TextAnalysis.funnelRows(one, names))
-        graft.operators.Merge.atomicOverwrite(
-          one.withColumn("__bid", lit(batchId)), countsPath)
-        graft.operators.Merge.atomicOverwrite(
+        commitSnapshot(one, countsPath, batchId)
+        commitSnapshot(
           seen.unionByName(flagged.select(col("__key"))).distinct(),
-          keysPath)
+          keysPath, batchId)
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -567,16 +531,17 @@ object Streams {
     * top-k monoid: `topk(topk(A) ∪ B) = topk(A ∪ B)`. State is
     * EXACTLY |queries|·k rows, never the corpus; ties break by
     * neighbor id, so feeding a corpus through in ANY batching (or
-    * replaying a batch — scores are deterministic per (qid, nid), the
-    * distinct absorbs duplicates) reproduces the batch operator
+    * re-feeding a vector — scores are deterministic per (qid, nid),
+    * the distinct absorbs duplicates) reproduces the batch operator
     * bit-for-bit (spec-pinned). PRECONDITION (the same one
     * [[graft.functions.Dedup.crossJaccardPairs]] states for doc_ids):
     * `vec_id` must be globally unique across the stream — the distinct
-    * that absorbs replays would also collapse two genuine corpus rows
+    * that absorbs re-fed vectors would also collapse two genuine rows
     * sharing a vec_id into one, where the batch operator's row_number
     * would rank both; parity holds only under unique ids. The callback
     * receives the ranked top-k table after each batch in
-    * [[graft.functions.Similarity.bruteForceTopK]]'s output shape.
+    * [[graft.functions.Similarity.bruteForceTopK]]'s output shape. The
+    * top-k table is a snapshot under the replay rule ([[Streams]]).
     */
   def topkStream(
       vecs: DataFrame,
@@ -595,7 +560,7 @@ object Streams {
         quantized(col("embedding")).as("qv"))
       .withColumn("qn", call_function("graft_norm_sq", col("qv")))
     vecs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         graft.plans.GraftFunctions.register(spark)
         val b = batch.select(col("vec_id"),
@@ -606,18 +571,15 @@ object Streams {
           .select(col("qid"), col("vec_id").as("nid"),
             cosineFromInts(call_function("graft_dot", col("v"), col("qv")),
               col("nsq"), col("qn")).as("cos"))
-        val state =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(statePath)))
-            spark.read.parquet(statePath)
-          else scored.limit(0)
+        val state = priorSnapshot(spark, statePath, batchId)
+          .getOrElse(scored.limit(0))
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col("qid")).orderBy(col("cos").desc, col("nid"))
         val merged = state.unionByName(scored).distinct()
           .withColumn("__rk", row_number().over(w))
           .filter(col("__rk") <= k)
           .drop("__rk")
-        graft.operators.Merge.atomicOverwrite(merged, statePath)
-        onTopk(spark.read.parquet(statePath)
+        onTopk(commitSnapshot(merged, statePath, batchId)
           .withColumn("rank", row_number().over(w))
           .select(col("qid"), col("rank"), col("nid"),
             round(col("cos"), 6).as("cos")))
@@ -634,10 +596,8 @@ object Streams {
     * merge into the accumulated per-source state; the callback
     * receives the accumulated audit (with rates) after every batch.
     * Feeding a corpus through in any batching reproduces the batch
-    * `piiAudit` EXACTLY (spec-pinned). State: one row per source,
-    * persisted with the [[funnelStream]] discipline — atomic
-    * overwrite + the last-applied batchId, so an at-least-once
-    * foreachBatch replay never double-counts.
+    * `piiAudit` EXACTLY (spec-pinned). State: one row per source, a
+    * snapshot under the replay rule ([[Streams]]).
     */
   def piiAuditStream(
       docs: DataFrame,
@@ -647,36 +607,15 @@ object Streams {
   ): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
         val cols = Seq("n_docs", "n_email", "n_ip", "n_phone",
           "n_docs_with_pii")
-        val exists =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(statePath))
-        val (prior, lastBid) =
-          if (exists) {
-            val p = spark.read.parquet(statePath)
-            // coalesce: a zero-row state file (an empty first batch
-            // still writes the frame) makes max() NULL — read it as
-            // "no batch applied" instead of NPE-ing the next batch
-            (Some(p.select(("source" +: cols).map(col): _*)),
-              p.agg(coalesce(max(col("__bid")), lit(-1L)))
-                .head().getLong(0))
-          } else (None, -1L)
-        val merged =
-          if (lastBid == batchId) prior.get // replay: already applied
-          else {
-            val b = graft.functions.TextAnalysis.piiAuditCounts(batch)
-            prior match {
-              case None => b
-              case Some(st) => st.unionByName(b).groupBy("source")
-                .agg(sum(cols.head).as(cols.head),
-                  cols.tail.map(c => sum(c).as(c)): _*)
-            }
-          }
-        graft.operators.Merge.atomicOverwrite(
-          merged.withColumn("__bid", lit(batchId)), statePath)
+        val b = graft.functions.TextAnalysis.piiAuditCounts(batch)
+        val merged = priorSnapshot(batch.sparkSession, statePath, batchId)
+          .fold(b)(_.unionByName(b).groupBy("source")
+            .agg(sum(cols.head).as(cols.head),
+              cols.tail.map(c => sum(c).as(c)): _*))
         onAudit(graft.functions.TextAnalysis.piiRate(
-          spark.read.parquet(statePath).drop("__bid")))
+          commitSnapshot(merged, statePath, batchId)))
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -699,10 +638,8 @@ object Streams {
     * per-source sample that stays valid as the corpus grows, without
     * ever rescanning it.
     *
-    * State persists with the [[piiAuditStream]] discipline — atomic
-    * overwrite + last-applied batchId, so an at-least-once replay is
-    * a no-op (bottom-k of an already-applied union is idempotent
-    * anyway; the guard merely skips the recompute).
+    * The winner rows are a snapshot under the replay rule
+    * ([[Streams]]).
     *
     * Unlike arrival-order operators ([[topkStream]]'s conventions),
     * the result is BATCHING-INVARIANT with no ordering precondition:
@@ -721,33 +658,14 @@ object Streams {
   ): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val exists =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(statePath))
-        val (prior, lastBid) =
-          if (exists) {
-            val p = spark.read.parquet(statePath)
-            (Some(p.select(col("g"), col("id"), col("rk"))),
-              p.agg(coalesce(max(col("__bid")), lit(-1L)))
-                .head().getLong(0))
-          } else (None, -1L)
-        val merged =
-          if (lastBid == batchId) prior.get // replay: already applied
-          else {
-            val arrivals = batch.select(col(group), col(id))
-            val pool = prior match {
-              case None => arrivals
-              case Some(st) =>
-                st.select(col("g").as(group), col("id").as(id))
-                  .unionByName(arrivals)
-            }
-            graft.functions.Selection.reservoirSample(
-              pool, col(group), col(id), k, salt)
-          }
-        graft.operators.Merge.atomicOverwrite(
-          merged.select(col("g"), col("id"), col("rk"))
-            .withColumn("__bid", lit(batchId)), statePath)
-        onSample(spark.read.parquet(statePath).drop("__bid"))
+        val arrivals = batch.select(col(group), col(id))
+        val pool = priorSnapshot(batch.sparkSession, statePath, batchId)
+          .fold(arrivals)(_.select(col("g").as(group), col("id").as(id))
+            .unionByName(arrivals))
+        val merged = graft.functions.Selection.reservoirSample(
+          pool, col(group), col(id), k, salt)
+        onSample(commitSnapshot(
+          merged.select(col("g"), col("id"), col("rk")), statePath, batchId))
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -762,10 +680,8 @@ object Streams {
     * callback receives the CUMULATIVE store-once savings row in
     * exactly `cdcDedupRatio`'s shape after every batch — the dedup
     * meter a chunk-store ingest pipeline exposes. State is one row per
-    * UNIQUE chunk (the store's own index, never the corpus text),
-    * persisted with the [[piiAuditStream]] discipline — atomic
-    * overwrite + the last-applied batchId, so an at-least-once
-    * foreachBatch replay never double-counts copies.
+    * UNIQUE chunk (the store's own index, never the corpus text), a
+    * snapshot under the replay rule ([[Streams]]).
     */
   def cdcStoreStream(
       docs: DataFrame,
@@ -775,31 +691,12 @@ object Streams {
   ): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val exists =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(statePath))
-        val (prior, lastBid) =
-          if (exists) {
-            val p = spark.read.parquet(statePath)
-            (Some(p.select(col("chunk_hash"), col("ln"), col("n"))),
-              p.agg(coalesce(max(col("__bid")), lit(-1L)))
-                .head().getLong(0))
-          } else (None, -1L)
-        val merged =
-          if (lastBid == batchId) prior.get // replay: already applied
-          else {
-            val b = graft.functions.Dedup.cdcPerHash(batch)
-            prior match {
-              case None => b
-              case Some(st) => st.unionByName(b)
-                .groupBy(col("chunk_hash"))
-                .agg(min(col("ln")).as("ln"), sum(col("n")).as("n"))
-            }
-          }
-        graft.operators.Merge.atomicOverwrite(
-          merged.withColumn("__bid", lit(batchId)), statePath)
+        val b = graft.functions.Dedup.cdcPerHash(batch)
+        val merged = priorSnapshot(batch.sparkSession, statePath, batchId)
+          .fold(b)(_.unionByName(b).groupBy(col("chunk_hash"))
+            .agg(min(col("ln")).as("ln"), sum(col("n")).as("n")))
         onRatio(graft.functions.Dedup.cdcRatioOf(
-          spark.read.parquet(statePath).drop("__bid")))
+          commitSnapshot(merged, statePath, batchId)))
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -815,8 +712,8 @@ object Streams {
     * n_ref_tokens)` — a drift spike between arriving data and the
     * corpus so far is the signal a production ingest gate alerts on.
     * First batch reports 0.0 (no reference yet). Reference state is
-    * the vocabulary-sized count table, persisted like
-    * [[semanticDedupStream]]'s state (atomic overwrite per batch).
+    * the vocabulary-sized count table, a snapshot under the replay
+    * rule ([[Streams]]).
     */
   def driftStream(
       docs: DataFrame,
@@ -831,11 +728,8 @@ object Streams {
             filter(split(lower(col("text")), "\\s+"), t => length(t) > 0))
             .as("token"))
           .groupBy("token").agg(count(lit(1)).as("c"))
-        val hasState =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(statePath))
-        val state =
-          if (hasState) spark.read.parquet(statePath)
-          else counts.limit(0)
+        val state = priorSnapshot(spark, statePath, batchId)
+          .getOrElse(counts.limit(0))
         val joined = counts.withColumnRenamed("c", "cb")
           .join(state.withColumnRenamed("c", "cr"), Seq("token"), "full")
           .na.fill(0L, Seq("cb", "cr"))
@@ -853,9 +747,9 @@ object Streams {
             dev.toDouble / (2.0 * nb.toDouble * nr.toDouble)
           }
         onDrift(batchId, tv, nb, nr)
-        graft.operators.Merge.atomicOverwrite(
+        commitSnapshot(
           joined.select(col("token"), (col("cb") + col("cr")).as("c")),
-          statePath)
+          statePath, batchId)
         joined.unpersist()
         ()
       }
@@ -873,8 +767,8 @@ object Streams {
     * end, exact integers everywhere else), then merged into the
     * reference. Callback gets `(batch_id, max_mean_shift, n_batch,
     * n_ref)`; first batch reports 0.0. State is the dims-row
-    * (dim, s, n) table — fixed KB at any corpus size, persisted with
-    * the [[driftStream]] atomic-overwrite discipline.
+    * (dim, s, n) table — fixed KB at any corpus size, a snapshot
+    * under the replay rule ([[Streams]]).
     */
   def embDriftStream(
       embeddings: DataFrame,
@@ -890,11 +784,8 @@ object Streams {
             .as(Seq("dim", "qx")))
           .groupBy("dim")
           .agg(sum(col("qx")).as("s"), count(lit(1)).as("n"))
-        val hasState =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(statePath))
-        val state =
-          if (hasState) spark.read.parquet(statePath)
-          else sums.limit(0)
+        val state = priorSnapshot(spark, statePath, batchId)
+          .getOrElse(sums.limit(0))
         val joined = sums
           .select(col("dim"), col("s").as("sb"), col("n").as("nb"))
           .join(state.select(col("dim"), col("s").as("sr"),
@@ -927,10 +818,10 @@ object Streams {
               .otherwise(lit(Double.PositiveInfinity)).as("ms"))
             .agg(max(col("ms"))).head().getDouble(0)
         onDrift(batchId, shift, nb, nr)
-        graft.operators.Merge.atomicOverwrite(
+        commitSnapshot(
           joined.select(col("dim"), (col("sb") + col("sr")).as("s"),
             (col("nb") + col("nr")).as("n")),
-          statePath)
+          statePath, batchId)
         joined.unpersist()
         ()
       }
@@ -938,6 +829,39 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
 
+  /** Streaming semantic dedup — the embedding-side complement of
+    * [[nearDupFreeStream]] and the incremental face of
+    * [[graft.functions.Similarity.semanticDedup]] (SemDeDup, Abbas et
+    * al. 2023): each micro-batch of `(vec_id, embedding)` rows is
+    * k-means-assigned to its nearest cell of the FIXED `centroids`
+    * (map-only, centroids ride as literals), candidate-matched by
+    * exact quantized-integer cosine against the accumulated state AND
+    * earlier rows of the same batch — candidates exist only WITHIN a
+    * cell, the same blocking scheme as the batch operator — and only
+    * semantically novel vectors are emitted. Every seen vector's
+    * quantized form appends to the state table (dropped ones too), so
+    * future members of an already-seen cluster are suppressed even
+    * when their nearest neighbor was itself dropped.
+    *
+    * Dedup rule is greedy earlier-wins (lower `vec_id` within a batch,
+    * arrival order across batches). Relation to the batch operator's
+    * connected-components survivors on the same chronological corpus:
+    * the streamed DROP set is always a SUBSET of the batch flagged set
+    * (a vector with an earlier similar neighbor is never its
+    * component's minimum), and the two are EQUAL whenever each
+    * duplicate group is pairwise-similar — the tight-cluster regime
+    * SemDeDup targets. Chains (A~B~C, A≁C) can keep one more survivor
+    * here than batch CC; spec-asserted both ways.
+    *
+    * Centroids must be stable across batches (train once — e.g.
+    * [[graft.functions.Similarity.trainedCentroids]] on a bootstrap
+    * sample — then pin); re-training mid-stream would silently change
+    * the blocking and lose cross-batch candidates. State is
+    * `(vec_id, cell, q, nsq)` — dim×8 bytes per vector, never raw
+    * text/media — and per-batch compare cost is Σ_cell |batch∩cell| ×
+    * |seen∩cell| via a hash equi-join on the cell id, never batch×N.
+    * The vector set is a snapshot under the replay rule ([[Streams]]).
+    */
   def semanticDedupStream(
       embeddings: DataFrame,
       centroids: Array[Array[Long]],
@@ -947,7 +871,7 @@ object Streams {
       onSurvivors: DataFrame => Unit,
   ): StreamingQuery =
     embeddings.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         graft.plans.GraftFunctions.register(spark)
         import graft.functions.Similarity
@@ -956,10 +880,8 @@ object Streams {
           .withColumn("nsq", call_function("graft_norm_sq", col("q")))
           .withColumn("cell", Similarity.cellOf(col("q"), centroids))
           .select("vec_id", "cell", "q", "nsq")
-        val state =
-          if (java.nio.file.Files.exists(java.nio.file.Paths.get(statePath)))
-            spark.read.parquet(statePath)
-          else quant.limit(0)
+        val state = priorSnapshot(spark, statePath, batchId)
+          .getOrElse(quant.limit(0))
         def side(df: DataFrame, s: String) = df.select(
           col("cell"), col("vec_id").as(s"${s}_id"),
           col("q").as(s"${s}_q"), col("nsq").as(s"${s}_n"))
@@ -972,18 +894,20 @@ object Streams {
             col("n_n"), col("p_n")) >= threshold)
           .select(col("n_id").as("vec_id")).distinct()
         onSurvivors(batch.join(dupIds, Seq("vec_id"), "left_anti"))
-        graft.operators.Merge.atomicOverwrite(
-          state.unionByName(quant), statePath)
+        commitSnapshot(state.unionByName(quant), statePath, batchId)
+        ()
       }
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
 
   /** Committed per-batch state directories under `root`: the `b<bid>`
-    * children with bid < `batchId` — the append-only-state read rule
-    * shared by [[neardupScreenStream]], [[urlDedupStream]] and
-    * [[hostCapStream]] (a replayed CURRENT batch never reads its own
-    * half-written increment).
+    * children with bid < `batchId` — the one place that decides which
+    * state a batch reads under the replay rule ([[Streams]]). A
+    * replayed batch never reads its own, possibly half-written, output;
+    * `.staged`/`.old` siblings of an interrupted commit never match.
+    * Append-only state reads all of them, snapshot state the newest
+    * ([[priorSnapshot]]).
     */
   private[graft] def committedBatchDirs(
       root: java.nio.file.Path, batchId: Long): Seq[String] =
@@ -1002,6 +926,34 @@ object Streams {
         b.result()
       } finally it.close()
     }
+
+  private def bidOf(dir: String): Long =
+    java.nio.file.Paths.get(dir).getFileName.toString.drop(1).toLong
+
+  /** The snapshot batch `batchId` reads: the newest one under `root`
+    * that an earlier batch committed, or None before the first.
+    */
+  private[graft] def priorSnapshot(
+      spark: SparkSession, root: String, batchId: Long): Option[DataFrame] =
+    committedBatchDirs(java.nio.file.Paths.get(root), batchId)
+      .maxByOption(bidOf).map(spark.read.parquet(_))
+
+  /** Commits `state` as batch `batchId`'s snapshot `root/b<batchId>`
+    * (atomic overwrite, so a replay replaces it whole), then deletes
+    * the snapshots older than the one the batch read — that one stays,
+    * since a replay of `batchId` reads it again. Returns the committed
+    * snapshot.
+    */
+  private[graft] def commitSnapshot(
+      state: DataFrame, root: String, batchId: Long): DataFrame = {
+    val path = s"$root/b$batchId"
+    graft.operators.Merge.atomicOverwrite(state, path)
+    committedBatchDirs(java.nio.file.Paths.get(root), batchId)
+      .sortBy(bidOf).dropRight(1)
+      .foreach(old => graft.operators.Merge.deleteRecursive(
+        java.nio.file.Paths.get(old)))
+    state.sparkSession.read.parquet(path)
+  }
 
   /** Seen-key screen shared by [[urlDedupStream]] and
     * [[hostCapStream]]: the rows of `winners` whose `canon_key` has
@@ -1043,24 +995,12 @@ object Streams {
     * well-defined under an arrival order).
     *
     * State is the seen canonical-key set — 16-byte md5 digests only,
-    * never URL text — stored APPEND-ONLY with the
-    * [[neardupScreenStream]] discipline: each batch writes its own
-    * survivor keys under `statePath/b<batchId>` (atomic overwrite of
-    * that one directory; an at-least-once replay rewrites identical
-    * content, and the history glob only reads bid < batchId, so a
-    * half-committed current batch is never read back). Per-batch state
-    * I/O is O(batch), never O(corpus). Emission is at-least-once: a
-    * replayed batch rewrites identical state but re-emits its
-    * survivors (consumers keyed by doc_id absorb the duplicates;
-    * [[hostCapStream]] shows the counter-guarded exactly-once form).
+    * never URL text — APPEND-ONLY under the replay rule ([[Streams]]):
+    * each batch writes its survivor keys under `statePath/b<batchId>`.
     *
-    * Scale shape: the history check runs as TWO BROADCAST joins so the
-    * corpus-sized seen set never shuffles — (1) the batch's winner
-    * keys (small) broadcast-SEMI-join the history scan (map-only: each
-    * history partition probes the broadcast hash and emits only keys
-    * this batch re-saw, ≤ batch rows), (2) that seen subset broadcasts
-    * back as the ANTI side over the batch winners. The per-batch
-    * history SCAN is the indexless frontier baseline (columnar
+    * Scale shape: the history check is [[seenKeyScreen]]'s two
+    * broadcast joins, so the corpus-sized seen set never shuffles. The
+    * per-batch history SCAN is the indexless frontier baseline (columnar
     * digests, ~16 bytes/URL); a 100 TB deployment fronts it with the
     * host-level policy tables this engine already derives
     * (`dedup_url_hosts` ratios, `corpus_host_cap` caps) so the
@@ -1123,21 +1063,12 @@ object Streams {
     * per-host window over the batch). PRECONDITION: doc_ids globally
     * unique and arrival-ordered (the [[topkStream]] convention).
     *
-    * State: (1) first-seen canonical keys, append-only per-bid
-    * directories under `statePath/keys` ([[neardupScreenStream]]
-    * discipline — O(batch) I/O, half-committed batches never read
-    * back); ALL first-seen keys are recorded, admitted or not — key
-    * knowledge is what the dup ratio measures, the budget only gates
-    * fetching. (2) the batch's admission delta under
-    * `statePath/admitted/b<batchId>` — the durable copy of what the
-    * callback receives. (3) per-host counters `(host, n_urls,
-    * n_canonical, n_kept)` — one row per host, atomic overwrite +
-    * last-applied batchId. Keys and the delta commit BEFORE counters,
-    * so a crash before the counter commit replays the whole batch
-    * (both overwrites are idempotent), while a committed counter row
-    * suppresses the recompute and re-emits the PERSISTED delta —
-    * admission rows are delivered at-least-once and never lost, with
-    * duplicates only on a crash inside the commit–callback window.
+    * State, under the replay rule ([[Streams]]): (1) first-seen
+    * canonical keys, APPEND-ONLY under `statePath/keys`; ALL
+    * first-seen keys are recorded, admitted or not — key knowledge is
+    * what the dup ratio measures, the budget only gates fetching. (2)
+    * per-host counters `(host, n_urls, n_canonical, n_kept)`, one row
+    * per host, a snapshot under `statePath/counters`.
     *
     * The callback receives this batch's admitted `(doc_id, url,
     * canon_url, canon_key, host)` — the fetch queue under budget.
@@ -1151,51 +1082,32 @@ object Streams {
   ): StreamingQuery =
     docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val countersPath = s"$statePath/counters.parquet"
-        val exists =
-          java.nio.file.Files.exists(java.nio.file.Paths.get(countersPath))
-        val (priorCounters, lastBid) =
-          if (exists) {
-            val p = spark.read.parquet(countersPath)
-            (Some(p.select(col("host"), col("n_urls"),
-              col("n_canonical"), col("n_kept"))),
-              p.agg(coalesce(max(col("__bid")), lit(-1L)))
-                .head().getLong(0))
-          } else (None, -1L)
-        if (lastBid == batchId) {
-          // replay of a fully-committed batch: re-emit the PERSISTED
-          // admission delta (written before the counter commit), so a
-          // crash between the commit and the callback cannot lose the
-          // batch's admissions — delivery is at-least-once of
-          // identical rows, never a silent drop
-          onAdmitted(
-            spark.read.parquet(s"$statePath/admitted/b$batchId"))
-        } else {
-          val canon = graft.functions.Normalize.canonicalUrl(col("url"))
-          val keyed = batch.select(col("doc_id"), col("url"),
-            canon.as("canon_url"),
-            md5(canon.cast("binary")).as("canon_key"),
-            graft.functions.Normalize.urlHost(col("url")).as("host"))
-          val winners = keyed.join(
-            keyed.groupBy(col("canon_key"))
-              .agg(min(col("doc_id")).as("doc_id")),
-            Seq("canon_key", "doc_id"), "left_semi")
-          // fresh feeds four consumers (stats, admission, the key
-          // write, the emitted rows' lineage) — cache it once
-          val fresh = graft.plans.Materialize(seenKeyScreen(winners,
-            committedBatchDirs(
-              java.nio.file.Paths.get(s"$statePath/keys"), batchId)))
-          // cumulative per-host knowledge INCLUDING this batch: every
-          // batch row counts as a seen URL, every fresh key as a new
-          // canonical resource
-          val batchStats = keyed.groupBy(col("host"))
-            .agg(count(lit(1)).as("n_urls_b"))
-            .join(fresh.groupBy(col("host"))
-              .agg(count(lit(1)).as("n_new_b")), Seq("host"), "left")
-            .na.fill(0L, Seq("n_new_b"))
-          // counters feeds budgets AND the post-admission update
-          val counters = graft.plans.Materialize(priorCounters match {
+        val countersPath = s"$statePath/counters"
+        val canon = graft.functions.Normalize.canonicalUrl(col("url"))
+        val keyed = batch.select(col("doc_id"), col("url"),
+          canon.as("canon_url"),
+          md5(canon.cast("binary")).as("canon_key"),
+          graft.functions.Normalize.urlHost(col("url")).as("host"))
+        val winners = keyed.join(
+          keyed.groupBy(col("canon_key"))
+            .agg(min(col("doc_id")).as("doc_id")),
+          Seq("canon_key", "doc_id"), "left_semi")
+        // fresh feeds four consumers (stats, admission, the key
+        // write, the emitted rows' lineage) — cache it once
+        val fresh = graft.plans.Materialize(seenKeyScreen(winners,
+          committedBatchDirs(
+            java.nio.file.Paths.get(s"$statePath/keys"), batchId)))
+        // cumulative per-host knowledge INCLUDING this batch: every
+        // batch row counts as a seen URL, every fresh key as a new
+        // canonical resource
+        val batchStats = keyed.groupBy(col("host"))
+          .agg(count(lit(1)).as("n_urls_b"))
+          .join(fresh.groupBy(col("host"))
+            .agg(count(lit(1)).as("n_new_b")), Seq("host"), "left")
+          .na.fill(0L, Seq("n_new_b"))
+        // counters feeds budgets AND the post-admission update
+        val counters = graft.plans.Materialize(
+          priorSnapshot(batch.sparkSession, countersPath, batchId) match {
             case None => batchStats.select(col("host"),
               col("n_urls_b").as("n_urls"),
               col("n_new_b").as("n_canonical"), lit(0L).as("n_kept"))
@@ -1208,45 +1120,36 @@ object Streams {
                   + coalesce(col("n_new_b"), lit(0L))).as("n_canonical"),
                 coalesce(col("n_kept"), lit(0L)).as("n_kept"))
           })
-          // the batch twin's cap rule on the stream's prefix
-          val budgets = counters
-            .withColumn("dup_ratio",
-              round(lit(1.0) - col("n_canonical").cast("double")
-                / col("n_urls").cast("double"), 4))
-            .withColumn("cap", greatest(lit(1L),
-              floor(lit(baseCap.toDouble) * (lit(1.0) - col("dup_ratio")))
-                .cast("long")))
-            .select(col("host"),
-              greatest(lit(0L), col("cap") - col("n_kept"))
-                .as("remaining"))
-          // admitted feeds the counter update AND the callback
-          val admitted = graft.plans.Materialize(
-            graft.functions.TextAnalysis.capPerGroup(
-              fresh, budgets, "remaining", baseCap, "host",
-              col("doc_id"), col("doc_id")))
-          // keys and the admission delta commit FIRST (idempotent
-          // overwrites), counters LAST (__bid is the batch's commit
-          // point) — a committed counter row implies the delta is on
-          // disk for replay re-emission
-          graft.operators.Merge.atomicOverwrite(
-            fresh.select(col("canon_key")), s"$statePath/keys/b$batchId")
-          graft.operators.Merge.atomicOverwrite(
-            admitted.select(col("doc_id"), col("url"), col("canon_url"),
-              col("canon_key"), col("host")),
-            s"$statePath/admitted/b$batchId")
-          val keptNow = counters.join(
+        // the batch twin's cap rule on the stream's prefix
+        val budgets = counters
+          .withColumn("dup_ratio",
+            round(lit(1.0) - col("n_canonical").cast("double")
+              / col("n_urls").cast("double"), 4))
+          .withColumn("cap", greatest(lit(1L),
+            floor(lit(baseCap.toDouble) * (lit(1.0) - col("dup_ratio")))
+              .cast("long")))
+          .select(col("host"),
+            greatest(lit(0L), col("cap") - col("n_kept"))
+              .as("remaining"))
+        // admitted feeds the counter update AND the callback
+        val admitted = graft.plans.Materialize(
+          graft.functions.TextAnalysis.capPerGroup(
+            fresh, budgets, "remaining", baseCap, "host",
+            col("doc_id"), col("doc_id")))
+        graft.operators.Merge.atomicOverwrite(
+          fresh.select(col("canon_key")), s"$statePath/keys/b$batchId")
+        commitSnapshot(
+          counters.join(
               admitted.groupBy(col("host"))
                 .agg(count(lit(1)).as("n_adm_b")), Seq("host"), "left")
             .na.fill(0L, Seq("n_adm_b"))
             .select(col("host"), col("n_urls"), col("n_canonical"),
-              (col("n_kept") + col("n_adm_b")).as("n_kept"))
-          graft.operators.Merge.atomicOverwrite(
-            keptNow.withColumn("__bid", lit(batchId)), countersPath)
-          onAdmitted(admitted.select(col("doc_id"), col("url"),
-            col("canon_url"), col("canon_key"), col("host")))
-          Seq(admitted, counters, fresh)
-            .foreach(graft.plans.Materialize.free(_, blocking = false))
-        }
+              (col("n_kept") + col("n_adm_b")).as("n_kept")),
+          countersPath, batchId)
+        onAdmitted(admitted.select(col("doc_id"), col("url"),
+          col("canon_url"), col("canon_key"), col("host")))
+        Seq(admitted, counters, fresh)
+          .foreach(graft.plans.Materialize.free(_, blocking = false))
         ()
       }
       .option("checkpointLocation", checkpoint)
@@ -1265,17 +1168,13 @@ object Streams {
     * arrival). PRECONDITION: doc_ids globally unique and
     * arrival-ordered (the [[topkStream]] convention).
     *
-    * State is the history's `(doc_id, shingles)` table — but stored
-    * APPEND-ONLY: each batch writes its own shingle table under
-    * `statePath/b<batchId>` (atomic overwrite of that one directory —
-    * an at-least-once replay rewrites identical content, and the
-    * history read only globs directories with bid < batchId, so a
-    * half-committed current batch is never read back). The per-batch
-    * I/O is O(batch), never O(corpus) — a full-state rewrite per
-    * micro-batch (the counts-state discipline of [[funnelStream]],
-    * fine for 1-row state) would be quadratic over an ingest day at
-    * corpus scale. History is re-read from columnar parquet per batch
-    * and never re-shingled. Internal checkpoints are freed per batch
+    * State is the history's `(doc_id, shingles)` table, APPEND-ONLY
+    * under the replay rule ([[Streams]]): each batch writes its own
+    * shingle table under `statePath/b<batchId>`, so per-batch I/O is
+    * O(batch) — a full-state snapshot per micro-batch would be
+    * quadratic over an ingest day at corpus scale. History is re-read
+    * from columnar parquet per batch and never re-shingled. Internal
+    * checkpoints are freed per batch
     * ([[graft.functions.Dedup.ingestScreenPairs]]); the emitted pairs
     * table is freed after the callback returns.
     */

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import graft.streaming.Streams
 
@@ -49,5 +51,28 @@ class StreamPlanSpec extends SparkSpec {
     assert(names(0L) == Set.empty[String])
     assert(Streams.committedBatchDirs(
       root.resolve("missing"), 5L) == Nil)
+    // snapshot state: a batch reads the newest committed bid < batchId
+    val snaps = java.nio.file.Files.createTempDirectory("graft-snap")
+    for (b <- Seq(1L, 3L, 7L))
+      Seq(b).toDF("bid").write.parquet(snaps.resolve(s"b$b").toString)
+    for ((n, b) <- Seq("b4.staged" -> 4L, "b9.old" -> 9L, "counters.parquet" -> 5L))
+      Seq(b).toDF("bid").write.parquet(snaps.resolve(n).toString)
+    def read(bid: Long): Option[Long] =
+      Streams.priorSnapshot(spark, snaps.toString, bid).map(_.as[Long].head())
+    assert(read(5L) == Some(3L)) // not b4.staged, not the newer b7
+    assert(read(2L) == Some(1L))
+    assert(read(1L) == None)
+    assert(read(Long.MaxValue) == Some(7L)) // not b9.old
+    // a commit keeps the snapshot it read and deletes the older ones;
+    // the siblings stay untouched
+    val committed = Streams.commitSnapshot(
+      Seq(8L).toDF("bid"), snaps.toString, 8L)
+    assert(committed.as[Long].collect().toSeq == Seq(8L))
+    val left = java.nio.file.Files.list(snaps)
+    val kept = try left.iterator().asScala.map(_.getFileName.toString).toSet
+      finally left.close()
+    assert(kept == Set("b7", "b8", "b4.staged", "b9.old", "counters.parquet"),
+      kept)
+    assert(read(9L) == Some(8L))
   }
 }

@@ -11,6 +11,10 @@ import graft.streaming.Streams
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The newest snapshot a snapshot-state stream committed under `root`. */
+  private def newestSnapshot(root: String) =
+    Streams.priorSnapshot(spark, root, Long.MaxValue).get
+
   test("changeLogStream + replay: AvailableNow processes all pending entries once") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
@@ -482,7 +486,7 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(out(1)._2 - want) < 1e-12,
       s"streamed TV ${out(1)._2} vs batch $want")
     // state accumulated both batches
-    assert(spark.read.parquet(state).agg(sum($"c")).head().getLong(0) == n1 + n2)
+    assert(newestSnapshot(state).agg(sum($"c")).head().getLong(0) == n1 + n2)
   }
 
   test("streaming curation funnel: accumulated stage counts equal the batch funnel") {
@@ -561,7 +565,7 @@ class StreamingSpec extends SparkSpec {
       s"incremental top-k diverged:\n  stream ${streamed.take(6)}…" +
         s"\n  batch  ${batch.take(6)}…")
     // state really is bounded at |queries|·k rows
-    assert(spark.read.parquet(state).count() == qids.size * 10L)
+    assert(newestSnapshot(state).count() == qids.size * 10L)
   }
 
   test("streaming PII audit: accumulated per-source counts equal the batch audit across restart") {
@@ -638,7 +642,7 @@ class StreamingSpec extends SparkSpec {
     assert(math.abs(out(1)._2 - want) < 1e-12,
       s"streamed shift ${out(1)._2} vs batch $want")
     // reference accumulated both halves
-    assert(spark.read.parquet(state).agg(sum($"n")).head().getLong(0)
+    assert(newestSnapshot(state).agg(sum($"n")).head().getLong(0)
       == emb.count() * 64)
   }
 
@@ -679,7 +683,7 @@ class StreamingSpec extends SparkSpec {
     run()
     assert(out.sorted == Seq(5L), out)
     // state holds every seen fingerprint
-    assert(spark.read.parquet(state).count() == 5)
+    assert(newestSnapshot(state).count() == 5)
   }
 
   test("log tail stream parses [ts] message lines (R4/S10)") {
@@ -764,7 +768,7 @@ class StreamingSpec extends SparkSpec {
       flagged.map(_._2)
     assert(out.toSet == batchSurvivors)
     // state holds every seen quantized vector, never raw payloads
-    val st = spark.read.parquet(state)
+    val st = newestSnapshot(state)
     assert(st.count() == 7 &&
       st.columns.sorted.toSeq == Seq("cell", "nsq", "q", "vec_id"))
   }
@@ -1063,30 +1067,21 @@ class StreamingSpec extends SparkSpec {
     run()
     val first = emitted.toSet
     assert(first.nonEmpty)
-    val counters = spark.read.parquet(s"$state/counters.parquet")
-      .select("host", "n_urls", "n_canonical", "n_kept", "__bid")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    // deleting ONLY the stream checkpoint (state survives) forces the
-    // source to re-deliver batch 0 with the same batchId — the
-    // at-least-once replay the commit protocol exists for
-    def rmr(p: java.nio.file.Path): Unit = {
-      if (java.nio.file.Files.isDirectory(p)) {
-        val s = java.nio.file.Files.list(p)
-        try s.forEach(rmr(_)) finally s.close()
-      }
-      java.nio.file.Files.deleteIfExists(p); ()
-    }
-    rmr(java.nio.file.Paths.get(ckpt))
+    def counters() = newestSnapshot(s"$state/counters")
+      .select("host", "n_urls", "n_canonical", "n_kept")
+      .as[(String, Long, Long, Long)].collect().toSet
+    val before = counters()
+    // deleting ONLY the checkpoint's commit record (state survives)
+    // forces the source to re-deliver batch 0 with the same batchId —
+    // the at-least-once replay the replay rule exists for
+    StreamReplaySpec.uncommitNewest(ckpt)
     emitted = Nil
     run()
     assert(emitted.toSet == first,
-      s"replay emission diverged from the persisted delta:" +
+      s"replay emission diverged from the first run's:" +
         s"\n replay-only=${(emitted.toSet -- first).take(5)}" +
         s"\n first-only=${(first -- emitted.toSet).take(5)}")
-    val countersAfter = spark.read.parquet(s"$state/counters.parquet")
-      .select("host", "n_urls", "n_canonical", "n_kept", "__bid")
-      .as[(String, Long, Long, Long, Long)].collect().toSet
-    assert(countersAfter == counters, "replay must not re-apply counters")
+    assert(counters() == before, "replay must not re-apply counters")
   }
 
   test("streaming reservoir sample: state equals the one-shot batch sample " +
@@ -1162,7 +1157,7 @@ class StreamingSpec extends SparkSpec {
     assert(last.get == want,
       s"stream savings diverged:\n  stream ${last.get}\n  batch  $want")
     // state is the store's index: one row per unique chunk, no text
-    val st = spark.read.parquet(state)
+    val st = newestSnapshot(state)
     assert(st.count() == want._2, "state must hold exactly n_unique rows")
     assert(!st.columns.contains("text"))
   }
