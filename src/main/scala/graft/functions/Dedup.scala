@@ -1449,18 +1449,33 @@ object Dedup {
     * must put a, b, c in one group even when a~c was never emitted
     * (sketch dedup misses borderline pairs by design).
     *
-    * Alternating large-star / small-star rounds (Kiveris et al.,
-    * "Connected Components in MapReduce and Beyond", SoCC'14),
-    * converging to min-labelled stars in O(log² n) rounds — duplicate
-    * graphs are near-cliques, so 2–3 rounds in practice. Scale shape:
-    * every round is two `min`-aggregate + join shuffles over the EDGE
-    * list only; documents never move, no per-node neighbor list is ever
-    * collected (a hub's edges stay distributed — the min-neighbor
-    * reduction is map-side combined, and the 1-row-per-key build side
-    * broadcasts or AQE-splits the join). Lineage is truncated per round
-    * via [[graft.plans.Materialize]] — localCheckpoint in local mode;
-    * a long-lived cluster job that points `setCheckpointDir` at
-    * durable storage gets reliable `checkpoint` automatically.
+    * Two phases, both over the EDGE list only (documents never move,
+    * no per-node neighbor list is ever collected):
+    *
+    *  1. Local contraction (Łącki, Mirrokni, Włodarczyk, "Connected
+    *     Components at Scale via Local Contractions", 2018): one
+    *     `mapPartitions` pass runs [[contractStars]] over each input
+    *     partition's pairs and emits, for every node that is not its
+    *     local component's minimum, the edge (node → that minimum).
+    *     Connectivity is preserved, and components that lie within one
+    *     partition arrive already as stars.
+    *  2. Alternating large-star / small-star rounds (Kiveris et al.,
+    *     "Connected Components in MapReduce and Beyond", SoCC'14) join
+    *     the stars that span partitions. Every round is two
+    *     `min`-aggregate + join shuffles; the min reductions are
+    *     map-side combined, so a hub's edges stay distributed.
+    *
+    * Edges are directed large→small (u > v) throughout. The loop stops
+    * as soon as the edges form a star forest: no node has more than
+    * one out-edge and no parent has an out-edge. Each centre then has
+    * no smaller neighbor, and every other node of its star points at
+    * it, so by the u > v invariant the centre is its component's
+    * minimum: that is the labelling, and both star steps leave it
+    * unchanged (it is their fixpoint). The test is one aggregate over
+    * the round's checkpoint; no extra round runs to confirm it.
+    * Lineage is truncated per round via [[graft.plans.Materialize]]
+    * (localCheckpoint in local mode; reliable `checkpoint` once
+    * `setCheckpointDir` points at durable storage).
     *
     * Returns `(doc_id, component)` for every node appearing in `pairs`,
     * where component = smallest doc_id in the connected component.
@@ -1482,54 +1497,41 @@ object Dedup {
     require(pairs.columns.length >= 2,
       "pairs must have the two id columns first")
     val ids = pairs.columns
+    val spark = pairs.sparkSession
+    import spark.implicits._
     // localCheckpoint blocks are persisted RDDs (not CacheManager
     // entries — Dataset.unpersist can't free them, and waiting on
     // GC-driven ContextCleaner cleanup would let several full edge-set
     // copies pile up over many rounds). Each round frees exactly the
     // RDDs backing the round it supersedes (`Materialize.free`), so
     // a checkpoint another thread takes meanwhile is never touched.
-
-    // Order-independent edge-set signature (count + xor of pair
-    // hashes), collected as an `observe` metric DURING the checkpoint
-    // materialization — zero extra jobs per round (it used to be a
-    // separate agg job). Equality of signatures only TRIGGERS the
-    // exact except-based confirmation, so convergence detection stays
-    // exact — a signature collision costs one extra job, never a
-    // wrong answer.
-    def checkpointWithSig(df: DataFrame): (DataFrame, (Long, Long)) = {
-      val (ck, m) = graft.plans.Materialize.withMetrics(df,
-        count(lit(1)).as("n"),
-        bit_xor(xxhash64(col("u"), col("v"))).as("x"))
-      (ck, (m("n").asInstanceOf[Long],
-        Option(m("x")).map(_.asInstanceOf[Long]).getOrElse(0L)))
-    }
-
-    // Invariant between steps: edges directed large→small (u > v).
-    var (edges, edgeSig) = checkpointWithSig(pairs
+    var edges = pairs
       .select(col(ids(0)).cast("long").as("a"), col(ids(1)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct())
-    var converged = false
+      .as[(Long, Long)]
+      .mapPartitions(contractStars(_, ContractCap))
+      .toDF("u", "v")
+      .distinct()
+      .materialize()
+    // Star forest ⇔ no node has two out-edges and no node is both a
+    // child (u) and a parent (v).
+    def isStarForest(e: DataFrame): Boolean =
+      e.select(col("u").as("n"), lit(1).as("out"), lit(false).as("parent"))
+        .union(e.select(col("v"), lit(0), lit(true)))
+        .groupBy("n").agg(sum(col("out")).as("out"), max(col("parent")).as("parent"))
+        .filter(col("out") > 1 || (col("out") === 1 && col("parent")))
+        .isEmpty
     var it = 0
-    while (!converged && it < maxIter) {
+    while (!isStarForest(edges)) {
+      if (it == maxIter)
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxIter rounds")
       // Large-star: every neighbor v > u links to m(u) = min(Γ(u) ∪ {u}).
-      //
-      // Round structure (restructured in round 14 — measured 1.2–2.6×
-      // per CC invocation across the er/doc graphs, outputs
-      // set-identical): the min-label reductions are plain
-      // map-side-combined groupBy.min — partial aggregation bounds a
-      // hub key's final-phase group at ≤ 1 partial row per map task
-      // (and under hash-agg spill fallback, one per spill chunk), so
-      // the near-clique mega-hub never concentrates its full row set
-      // in one reduce group (guide §2.3; the adversarial star-graph
-      // spec exercises a 3000-spoke hub). The large-star output is NOT
-      // distinct()ed — min over a multiset and the final small-star
-      // distinct absorb duplicates, and dropping the intermediate
-      // exchange cuts the round from ~9 logical exchanges to 5, all
-      // ENSURE_REQUIREMENTS (AQE skew-split stays available for the
-      // two joins, unlike pre-partitioned forms), with the sym-by-u
-      // and large-by-u subtrees deduped by ReusedExchange at runtime.
+      // The large-star output is NOT distinct()ed — min over a multiset
+      // and the small-star distinct absorb duplicates, which keeps the
+      // round at 5 logical exchanges, all ENSURE_REQUIREMENTS (AQE
+      // skew-split stays available for the two joins), with the
+      // sym-by-u and large-by-u subtrees deduped by ReusedExchange.
       val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
       val lmins = sym.groupBy("u").agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("u"), col("mn")).as("m"))
@@ -1540,28 +1542,62 @@ object Dedup {
       // Small-star: each node re-points its smaller neighbors (and
       // itself) at the minimum of them.
       val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-      // Stars (u→root, root = component min) are fixpoints of both
-      // steps, so a same-set check per round detects convergence:
-      // |A| = |B| ∧ A∖B = ∅ ⇒ A = B for distinct sets. The signature
-      // pre-filter skips the except on rounds that visibly changed.
-      val (small, smallSig) = checkpointWithSig(large.join(smins, "u")
+      val small = large.join(smins, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(smins.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .distinct())
-      converged = smallSig == edgeSig && small.except(edges).isEmpty
-      // `edges` (the superseded round) was last read by the except
-      // above; its blocks are safe to drop now.
+        .distinct()
+        .materialize()
       graft.plans.Materialize.free(edges, blocking = false)
       edges = small
-      edgeSig = smallSig
       it += 1
     }
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIter rounds")
     edges.select(col("u").as("doc_id"), col("v").as("component"))
       .union(edges.select(col("v"), col("v")).distinct())
+  }
+
+  /** Entries one [[contractStars]] call holds before it flushes, so a
+    * task's map stays in the order of 10–20 MB (`LongMap` keys and
+    * boxed values) whatever the partition's size.
+    */
+  private[functions] final val ContractCap = 1 << 18
+
+  /** Union-find over a stream of `(a, b)` pairs (a ≠ b): min-root union
+    * with path compression, so every root is the minimum of its
+    * component. Emits `(x, root(x))` for every node that is not a root
+    * (x > root(x)); those stars connect exactly what the pairs connect.
+    * Only non-root nodes have entries. When `cap` entries are held, the
+    * stars so far are emitted and the map cleared: flushed stars are
+    * still valid spanning edges, so the caller's later rounds join what
+    * one flush split. Until a partition reaches `cap`, its output
+    * depends only on its set of pairs, not their order, so a retried
+    * task emits the same rows.
+    */
+  private[functions] def contractStars(pairs: Iterator[(Long, Long)],
+      cap: Int): Iterator[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def root(x: Long): Long = {
+      var r = x
+      var p = parent.getOrElse(r, r)
+      while (p != r) { r = p; p = parent.getOrElse(r, r) }
+      var y = x
+      while (y != r) { val next = parent(y); parent(y) = r; y = next }
+      r
+    }
+    // Absorbs pairs until the input ends or `cap` entries are held,
+    // then emits the stars so far and clears the map.
+    def nextChunk(): Iterator[(Long, Long)] = {
+      while (pairs.hasNext && parent.size < cap) {
+        val (a, b) = pairs.next()
+        val (ra, rb) = (root(a), root(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val stars = parent.keysIterator.toArray.map(x => (x, root(x)))
+      parent.clear()
+      stars.iterator
+    }
+    Iterator.continually(pairs.hasNext).takeWhile(identity)
+      .flatMap(_ => nextChunk())
   }
 
   // -------------------------------------------- content-defined chunking

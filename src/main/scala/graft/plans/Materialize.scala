@@ -62,7 +62,7 @@ object Materialize {
     * Returns the materialized dataset and the observed metric row as
     * a name→value map (aggregates over zero rows observe as null —
     * callers own that default). The shared form of the pattern
-    * connectedComponents, HITS, k-core and BFS each carried privately.
+    * HITS, k-core and BFS each carried privately.
     */
   def withMetrics[T](ds: Dataset[T], first: org.apache.spark.sql.Column,
       rest: org.apache.spark.sql.Column*): (Dataset[T], Map[String, Any]) = {

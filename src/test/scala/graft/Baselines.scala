@@ -13,6 +13,25 @@ import graft.functions.{Dedup, TextAnalysis}
   */
 object Baselines {
 
+  /** Connected-component labels of an undirected pair list by a
+    * sequential union-find: node → smallest node of its component, for
+    * every node of a pair. Self-loops connect nothing and are skipped,
+    * as `Dedup.connectedComponents` skips them.
+    */
+  def componentLabels(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElse(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    val links = pairs.filter { case (a, b) => a != b }
+    links.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    links.flatMap { case (a, b) => Seq(a, b) }.distinct.map(x => x -> find(x)).toMap
+  }
+
   /** Quantize a float embedding to exact integer components in
     * higher-order-function form — the semantics `graft_quantize`
     * (`Similarity.quantized`) reproduces.

@@ -261,18 +261,34 @@ class DedupSimilaritySpec extends SparkSpec {
       val n = 60
       val es = Seq.fill(80)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
         .filter { case (a, b) => a != b }
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int =
-        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val wantR = es.flatMap { case (a, b) => Seq(a, b) }.distinct
-        .map(x => x -> find(x.toInt).toLong).toMap
       val gotR = Dedup.connectedComponents(es.toDF("a_id", "b_id"))
         .as[(Long, Long)].collect().toMap
-      assert(gotR == wantR)
+      assert(gotR == Baselines.componentLabels(es))
+    }
+  }
+
+  test("connected components do not depend on partitioning: 1, 3 and 8 input partitions") {
+    // The CC fixtures of this suite, each spread round-robin (pair i to
+    // partition i mod n) so that components cross partitions and the
+    // star rounds run after the per-partition contraction.
+    def spread(es: Seq[(Long, Long)], n: Int) =
+      spark.sparkContext.parallelize(0 until n, n)
+        .flatMap(p => es.indices.filter(_ % n == p).map(es))
+        .toDF("a_id", "b_id")
+    val rnd = new scala.util.Random(42)
+    val fixtures = Seq(
+      "chain/clique/self-loop" -> Seq((2L, 1L), (2L, 3L), (3L, 4L), (10L, 11L),
+        (20L, 21L), (21L, 22L), (20L, 22L), (1L, 2L), (7L, 7L))) ++
+      (1 to 3).map(i => s"random $i" -> Seq.fill(80)(
+        (rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))) ++
+      Seq("300-node path" -> (0L until 299L).map(i => (i, i + 1)),
+        "3000-spoke star" -> (1L to 3000L).map(i => (0L, i)))
+    for ((name, es) <- fixtures; n <- Seq(1, 3, 8)) {
+      val df = spread(es, n)
+      assert(df.rdd.getNumPartitions == n)
+      val got = Dedup.connectedComponents(df).as[(Long, Long)].collect()
+      assert(got.length == got.map(_._1).distinct.length, s"$name at $n: a node labelled twice")
+      assert(got.toMap == Baselines.componentLabels(es), s"$name at $n partitions")
     }
   }
 
