@@ -48,12 +48,14 @@ import org.apache.spark.sql.SparkSession
   *    on every pass at 100 entries; at 1024 the first pass compiles
   *    268 and the next 8–16. A change-log ETL tick over 5 tables
   *    compiles 79 classes, then 6, then 0 at either size: its cycle
-  *    fits. The whole 266-query suite at sf0.01 compiles about 3,100
-  *    classes in its first pass and under 100 in its second. An entry
-  *    holds about 25–30 KB of heap, so 1024 entries (about 4× the
-  *    heads' cycle) cost at most about 30 MiB, where holding the whole
-  *    suite would cost about 90 MiB. Static: Spark reads it once, when
-  *    the JVM first generates code.
+  *    fits. The whole 266-query suite does not: run twice in name
+  *    order in one JVM at 4 cores, it compiled 3,242 classes in its
+  *    first pass and 3,105 in its second at sf0.01 (3,226 and 3,092
+  *    at sf0.001), so a process cycling every query recompiles nearly
+  *    all of them. An entry holds about 25–30 KB of heap, so 1024
+  *    entries (about 4× the heads' cycle) cost at most about 30 MiB,
+  *    where holding the whole suite would cost about 90 MiB. Static:
+  *    Spark reads it once, when the JVM first generates code.
   *
   * Durable checkpointing: pass `checkpointDir` (HDFS/object-store
   * path) and every lineage-truncation site in the engine

@@ -1,10 +1,9 @@
 package graft.operators
 import graft.plans.Materialize
-import graft.plans.Materialize.MaterializeOps
+import graft.plans.Materialize.{MaterializeOps, Rounds}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative graph analytics beyond connected components (which lives
   * with the dedup family — `Dedup.connectedComponents`). First
@@ -24,9 +23,14 @@ import org.apache.spark.storage.StorageLevel
   * shuffle of the O(nodes) rank table to the edge partitioning plus a
   * map-side-combined sum onto `dst` — cost per iteration O(edges)
   * with no growing state. Rank lineage is truncated with a
-  * `localCheckpoint` every few rounds so deep iteration counts don't
-  * accumulate a quadratic plan (same discipline as
-  * `Dedup.connectedComponents`).
+  * `localCheckpoint` every 5 rounds so deep iteration counts don't
+  * accumulate a quadratic plan.
+  *
+  * Every loop here keeps its rounds in a [[Materialize.Rounds]]
+  * tracker that the public call owns: superseded rounds are freed as
+  * the loop goes, and when an operator returns, the only persisted
+  * RDDs it leaves are the ones its output reads (a `*Report`
+  * certificate reads none).
   *
   * Overflow bound (documented, asserted): `85 * Σ contributions` must
   * fit a signed 64-bit long. Σ over ALL nodes is ≤ nodes·r0, so with
@@ -47,16 +51,10 @@ object Graphs {
     * (85·Σ)/100` in floor arithmetic.
     */
   def pageRank(edges: DataFrame, iters: Int, r0: Long = 1000000000L): DataFrame = {
-    val (_, ranks, e, freeRounds) = pageRankStates0(edges, iters, r0,
+    val g = new Rounds(keep = 1)
+    val (_, ranks) = pageRankStates(g, edges, None, iters, r0,
       materializePrev = false)
-    // The final ranks are materialized (eager localCheckpoint) so the
-    // degree-joined edge table and any retained round checkpoints can
-    // be freed HERE — callers get a self-contained result with no
-    // storage obligation left behind.
-    val out = ranks.materialize()
-    freeRounds()
-    e.unpersist(blocking = false)
-    out
+    g.close(ranks.materialize())
   }
 
   /** PERSONALIZED PageRank (Haveliwala 2002 lineage — the
@@ -69,49 +67,14 @@ object Graphs {
     * everyone else absent; a node appears in the output once any walk
     * mass reaches it (or it is a seed). Same per-round O(edges)
     * shuffle + map-side combine as [[pageRank]]; the seed table is
-    * O(seeds) and broadcast-able; round lineage truncates via the
-    * [[pageRankStates0]] checkpoint discipline.
+    * O(seeds) and broadcast-able.
     */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int, r0: Long = 1000000000L): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(r0 >= 100, "r0 must carry at least 2 decimal digits")
-    val sc = edges.sparkSession.sparkContext
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = edges.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val teleport = 15L * r0 / 100L
-    val seed = seeds.select(col(seeds.columns(0)).as("node")).distinct()
-      .materialize()
-    var gens: List[Set[Int]] = Nil
-    def ckpt(df: DataFrame): DataFrame = {
-      val ck = df.materialize()
-      val g = Materialize.rddIds(ck) :: gens
-      gens = if (g.size > 1) {
-        Materialize.free(sc, g.last, blocking = false); g.init
-      } else g
-      ck
-    }
-    var ranks = seed.withColumn("r", lit(r0))
-    for (i <- 1 to iters) {
-      val contrib = e.join(ranks, e("src") === ranks("node"))
-        .select(col("dst"), expr("r div deg").as("c"))
-        .groupBy("dst")
-        .agg(sum(col("c")).as("s"))
-        .select(col("dst").as("node"), expr("(85 * s) div 100").as("rc"))
-      ranks = contrib
-        .join(seed.withColumn("__t", lit(teleport)), Seq("node"), "full")
-        .select(col("node"),
-          (coalesce(col("rc"), lit(0L)) + coalesce(col("__t"), lit(0L)))
-            .as("r"))
-      if (i % 5 == 0 && i < iters) ranks = ckpt(ranks)
-    }
-    val out = ranks.materialize()
-    Materialize.free(sc, gens.flatten.toSet, blocking = false)
-    Materialize.free(seed, blocking = false)
-    e.unpersist(blocking = false)
-    out
+    val g = new Rounds(keep = 1)
+    val (_, ranks) = pageRankStates(g, edges, Some(seeds), iters, r0,
+      materializePrev = false)
+    g.close(ranks.materialize())
   }
 
   /** One-row fixpoint certificate `(op, rounds, changed_last_round,
@@ -125,60 +88,54 @@ object Graphs {
       lit(changed).as("changed_last_round"),
       lit(changed == 0L).as("converged"))
 
-  /** (round iters−1 ranks, round iters ranks, the persisted
-    * degree-joined edge table — caller unpersists — and a closure
-    * freeing the retained round checkpoints, called by the caller
-    * AFTER its last action reading the returned states).
-    * `materializePrev` checkpoints the state BEFORE the final round,
-    * so a caller comparing prev vs last (the report) runs the shared
-    * round prefix ONCE — Catalyst shares no subtrees, so without it
-    * the compare join recomputes rounds 1…iters−1 twice.
-    *
-    * Checkpoint retention follows [[hitsLoop]]'s discipline: one
-    * generation stays live inside the loop (a new checkpoint is
-    * eager, so its predecessor can never be read again), superseded
-    * generations are freed immediately, and the final generation is
-    * freed by the returned closure — no node-scale blocks outlive the
-    * call in a long-lived session.
+  /** The integer PageRank iteration behind [[pageRank]],
+    * [[personalizedPageRank]] and [[pageRankReport]]: (round iters−1
+    * ranks, round iters ranks). The teleport term lands on `seeds`
+    * when given (a full join, so a seed no walk reaches keeps its
+    * teleport) and otherwise on every node that received a
+    * contribution (global PageRank, where nodes with no in-edges drop
+    * out). `materializePrev` checkpoints the state BEFORE the final
+    * round, so a caller comparing prev vs last (the report) runs the
+    * shared round prefix ONCE — Catalyst shares no subtrees, so
+    * without it the compare join recomputes rounds 1…iters−1 twice.
+    * Both returned states read at most the newest round `g` holds.
     */
-  private def pageRankStates0(edges: DataFrame, iters: Int,
-      r0: Long, materializePrev: Boolean)
-      : (DataFrame, DataFrame, DataFrame, () => Unit) = {
+  private def pageRankStates(g: Rounds, edges: DataFrame,
+      seeds: Option[DataFrame], iters: Int, r0: Long,
+      materializePrev: Boolean): (DataFrame, DataFrame) = {
     require(iters >= 1, "iters must be >= 1")
     require(r0 >= 100, "r0 must carry at least 2 decimal digits")
-    val sc = edges.sparkSession.sparkContext
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
     // (src, dst, deg) — the per-iteration join input, reused `iters`
     // times; persist so the degree join runs once.
-    val e = edges.join(deg, "src")
-      .select(col("src"), col("dst"), col("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = g.cache(edges.join(deg, "src")
+      .select(col("src"), col("dst"), col("deg")))
     val teleport = 15L * r0 / 100L
-    var gens: List[Set[Int]] = Nil // newest first; keep 1 live
-    def ckpt(df: DataFrame): DataFrame = {
-      val ck = df.materialize()
-      val g = Materialize.rddIds(ck) :: gens
-      gens = if (g.size > 1) {
-        Materialize.free(sc, g.last, blocking = false); g.init
-      } else g
-      ck
-    }
-    var ranks = e.select(col("src").as("node")).distinct()
+    val seed = seeds.map(s =>
+      g.hold(s.select(col(s.columns(0)).as("node")).distinct()))
+    var ranks = seed.getOrElse(e.select(col("src").as("node")).distinct())
       .withColumn("r", lit(r0))
     var prev = ranks
     for (i <- 1 to iters) {
-      if (materializePrev && i == iters) ranks = ckpt(ranks)
+      if (materializePrev && i == iters) ranks = g(ranks)
       prev = ranks
-      ranks = e.join(ranks, e("src") === ranks("node"))
+      val contrib = e.join(ranks, e("src") === ranks("node"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy("dst")
         .agg(sum(col("c")).as("s"))
-        .select(col("dst").as("node"),
-          (lit(teleport) + expr("(85 * s) div 100")).as("r"))
-      if (i % 5 == 0 && i < iters) ranks = ckpt(ranks)
+        .select(col("dst").as("node"), expr("(85 * s) div 100").as("rc"))
+      ranks = seed match {
+        case None =>
+          contrib.select(col("node"), (lit(teleport) + col("rc")).as("r"))
+        case Some(s) =>
+          contrib.join(s.withColumn("__t", lit(teleport)), Seq("node"), "full")
+            .select(col("node"),
+              (coalesce(col("rc"), lit(0L)) + coalesce(col("__t"), lit(0L)))
+                .as("r"))
+      }
+      if (i % 5 == 0 && i < iters) ranks = g(ranks)
     }
-    (prev, ranks, e,
-      () => Materialize.free(sc, gens.flatten.toSet, blocking = false))
+    (prev, ranks)
   }
 
   /** Convergence certificate for fixed-iteration [[pageRank]] (the
@@ -194,15 +151,14 @@ object Graphs {
   def pageRankReport(edges: DataFrame, iters: Int,
       r0: Long = 1000000000L): DataFrame = {
     require(iters >= 2, "need two rounds to compare")
-    val (prev, last, e, freeRounds) = pageRankStates0(edges, iters, r0,
+    val g = new Rounds(keep = 1)
+    val (prev, last) = pageRankStates(g, edges, None, iters, r0,
       materializePrev = true)
     val changed = last
       .join(prev.select(col("node"), col("r").as("__pr")), Seq("node"), "full")
       .filter(not(col("r") <=> col("__pr")))
       .count()
-    freeRounds()
-    e.unpersist(blocking = false)
-    certRow(edges, "pagerank", iters, changed)
+    g.close(certRow(edges, "pagerank", iters, changed))
   }
 
   /** Fixed-iteration integer HITS (Kleinberg 1999 — hubs point at good
@@ -227,9 +183,7 @@ object Graphs {
     *
     * Shape at scale: per half-step ONE shuffle of the O(nodes) score
     * table to the edge side plus a map-side-combined sum; the rescale
-    * max rides as an `observe` metric ON that same job and returns as
-    * a driver literal (round 10 — it used to be a separate 1-row
-    * aggregate crossJoined back, one extra job per half-step). Nodes
+    * max rides as an `observe` metric ON that same job. Nodes
     * with no in-edges hold authority 0, no out-edges hub 0 — kept in
     * the output via the node-universe left join.
     *
@@ -242,103 +196,66 @@ object Graphs {
     * graph vs ~3 s with it.
     */
   def hits(edges: DataFrame, iters: Int, r0: Long = 1000000L): DataFrame = {
-    require(iters >= 1, "iters must be >= 1")
-    require(r0 >= 100, "r0 must carry at least 2 decimal digits")
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // the node universe feeds the loop's hub seed AND the output join
-    // — materialize so its shuffle runs once (no-subtree-sharing).
-    // Derived with ONE explode pass over e, not a src∪dst self-union:
-    // the union form read e twice in the cache-fill job (two subtree
-    // consumers racing a cold cache), and this single-consumer pass
-    // doubles as the edge-cache warm-up that hitsLoop used to pay a
-    // separate count() job for (round 15; node set identical).
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .materialize()
-    val (_, _, hub, auth, freeLoop) = hitsLoop(e, nodes, iters, r0,
-      keepGens = 1)
-    val out = nodes
-      .join(hub.select(col("node"), col("h").as("hub")), Seq("node"), "left")
-      .join(auth.select(col("node"), col("a").as("auth")), Seq("node"), "left")
-      .na.fill(0L, Seq("hub", "auth"))
-      .materialize()
-    // `out` is eagerly materialized: the retained half-step
-    // checkpoints, the node universe and the edge cache are no longer
-    // reachable.
-    freeLoop()
-    Materialize.free(nodes, blocking = false)
-    e.unpersist(blocking = false)
-    out
+    // the output reads the last auth and hub half-steps
+    val g = new Rounds(keep = 2)
+    g.close(hitsStates(g, edges, iters, r0)._2.materialize())
   }
 
   /** The HITS half-step engine shared by [[hits]] and [[hitsReport]]:
     * `iters` max-rescaled integer rounds over the persisted edge
-    * table. Returns (round iters−1 hub, round iters−1 auth, final
-    * hub, final auth, free-retained-checkpoints closure).
-    *
-    * Superseded half-step checkpoints are freed EAGERLY inside the
-    * loop — `keepGens` generations stay live (1 for [[hits]]: araw_i
-    * until araw_{i+1} materializes, since the final auth projection
-    * reads the final araw; 2 for [[hitsReport]], which compares the
-    * last two rounds). Without the eager free a single high-iters
-    * call accumulates 2·iters materialized edge-scale RDDs for its
-    * whole lifetime. Each checkpoint's OWN backing RDD ids come from
-    * its LogicalRDD leaves (`Materialize.rddIds`) — no global
-    * `getPersistentRDDs` diffing, so the loop is safe to run
-    * concurrently with other plans (the fixpoint-delta query runs it
-    * alongside the PageRank report).
+    * table. Returns (round iters−1, round iters) as `(node, hub,
+    * auth)` over the node universe, 0-filled. The last state reads the
+    * last two half-steps `g` holds, the previous state the two before.
     *
     * The rescale MAX rides as an `observe` metric ON each half-step's
-    * materialization job (Materialize.withMetrics) and comes back as
-    * a driver literal — no separate 1-row aggregate job, no
-    * scalar-attach crossJoin in the plan.
+    * materialization job and comes back to the plan as a one-row
+    * local relation read by a scalar subquery — data, not SQL text,
+    * so the generated code does not depend on the graph: no separate
+    * 1-row aggregate job, and no new classes to compile per graph. The
+    * relation holds a DECIMAL: generated code inlines a LONG
+    * subquery result as a literal, but reads a decimal from its
+    * reference array.
     */
-  private def hitsLoop(e: DataFrame, nodes: DataFrame, iters: Int,
-      r0: Long, keepGens: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, () => Unit) = {
-    val sc = e.sparkSession.sparkContext
-    // the edge cache is already warm: both callers materialize the
-    // node universe from `e` (one single-consumer explode pass) before
-    // entering the loop, so the separate count() warm-up job round 10
-    // added is gone (round 15)
-    def ckptMaxed(df: DataFrame, scoreCol: String): (DataFrame, Long) = {
-      val (ck, m) = Materialize.withMetrics(df,
-        max(col(scoreCol)).as("m"))
-      // empty raw table (edge-less graph): any nonzero divisor works,
-      // the rescale projects zero rows
-      (ck, Option(m("m")).fold(1L)(_.asInstanceOf[Long]))
-    }
-    var aGens: List[Set[Int]] = Nil // newest first
-    var hGens: List[Set[Int]] = Nil
-    def push(gens: List[Set[Int]], ids: Set[Int]): List[Set[Int]] = {
-      val g = ids :: gens
-      if (g.size > keepGens) {
-        Materialize.free(sc, g.last, blocking = false); g.init
-      } else g
+  private def hitsStates(g: Rounds, edges: DataFrame, iters: Int,
+      r0: Long): (DataFrame, DataFrame) = {
+    require(iters >= 1, "iters must be >= 1")
+    require(r0 >= 100, "r0 must carry at least 2 decimal digits")
+    val spark = edges.sparkSession
+    import spark.implicits._
+    val e = g.cache(edges.select(col("src"), col("dst")))
+    // The node universe feeds the loop's hub seed AND both filled
+    // states — materialize so its shuffle runs once
+    // (no-subtree-sharing). ONE explode pass over e, not a src∪dst
+    // self-union: the union form read e twice in the cache-fill job
+    // (two subtree consumers racing a cold cache), and this
+    // single-consumer pass doubles as the edge-cache warm-up.
+    val nodes = g.hold(e.select(explode(array(col("src"), col("dst")))
+      .as("node")).distinct())
+    def filled(h: DataFrame, a: DataFrame): DataFrame = nodes
+      .join(h.select(col("node"), col("h").as("hub")), Seq("node"), "left")
+      .join(a.select(col("node"), col("a").as("auth")), Seq("node"), "left")
+      .na.fill(0L, Seq("hub", "auth"))
+    // (key AS node, (raw·r0) div max(raw)) over one materialized
+    // half-step; an empty raw table (edge-less graph) has no max, and
+    // any nonzero divisor works since the rescale projects zero rows
+    def rescaled(raw: DataFrame, key: String, score: String,
+        out: String): DataFrame = {
+      val (ck, m) = g.withMetrics(raw, max(col(score)).as("m"))
+      val mx = Option(m("m")).fold(1L)(_.asInstanceOf[Long])
+      ck.withColumn("__m", Seq(BigDecimal(mx)).toDF("m").scalar().cast("long"))
+        .select(col(key).as("node"), expr(s"($score * $r0) div __m").as(out))
     }
     var hub = nodes.withColumn("h", lit(r0))
-    var auth: DataFrame = null
-    var hubPrev: DataFrame = null
-    var authPrev: DataFrame = null
+    var auth = nodes.withColumn("a", lit(0L))
+    var prev = (hub, auth)
     for (_ <- 1 to iters) {
-      hubPrev = hub
-      authPrev = auth
-      val (araw, am) = ckptMaxed(
-        e.join(hub, e("src") === hub("node"))
-          .groupBy(col("dst")).agg(sum(col("h")).as("ar")), "ar")
-      aGens = push(aGens, Materialize.rddIds(araw))
-      auth = araw.select(col("dst").as("node"),
-        expr(s"(ar * $r0) div ${am}L").as("a"))
-      val (hraw, hm) = ckptMaxed(
-        e.join(auth, e("dst") === auth("node"))
-          .groupBy(col("src")).agg(sum(col("a")).as("hr")), "hr")
-      hGens = push(hGens, Materialize.rddIds(hraw))
-      hub = hraw.select(col("src").as("node"),
-        expr(s"(hr * $r0) div ${hm}L").as("h"))
+      prev = (hub, auth)
+      auth = rescaled(e.join(hub, e("src") === hub("node"))
+        .groupBy(col("dst")).agg(sum(col("h")).as("ar")), "dst", "ar", "a")
+      hub = rescaled(e.join(auth, e("dst") === auth("node"))
+        .groupBy(col("src")).agg(sum(col("a")).as("hr")), "src", "hr", "h")
     }
-    (hubPrev, authPrev, hub, auth,
-      () => Materialize.free(sc, (aGens ++ hGens).flatten.toSet, blocking = false))
+    (filled(prev._1, prev._2), filled(hub, auth))
   }
 
   /** Convergence certificate for fixed-iteration [[hits]]: one row
@@ -352,32 +269,18 @@ object Graphs {
   def hitsReport(edges: DataFrame, iters: Int,
       r0: Long = 1000000L): DataFrame = {
     require(iters >= 2, "need two rounds to compare")
-    require(r0 >= 100, "r0 must carry at least 2 decimal digits")
-    val e = edges.select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // 3 consumers (loop seed + both filled states): materialize once;
-    // single explode pass = the cache warm-up too (see [[hits]])
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .materialize()
-    val (hubPrev, authPrev, hub, auth, freeLoop) =
-      hitsLoop(e, nodes, iters, r0, keepGens = 2)
-    def filled(h: DataFrame, a: DataFrame, hn: String,
-        an: String): DataFrame = nodes
-      .join(h.select(col("node"), col("h").as(hn)), Seq("node"), "left")
-      .join(a.select(col("node"), col("a").as(an)), Seq("node"), "left")
-      .na.fill(0L, Seq(hn, an))
+    // the previous state reads the two half-steps before the last two
+    val g = new Rounds(keep = 4)
+    val (prev, last) = hitsStates(g, edges, iters, r0)
     // Both filled states cover the SAME node universe, so the inner
     // compare join pairs every node's final state with its prev state;
     // one count job over the loop checkpoints.
-    val changed = filled(hub, auth, "hub", "auth")
-      .join(filled(hubPrev, authPrev, "phub", "pauth"), Seq("node"))
+    val changed = last
+      .join(prev.select(col("node"), col("hub").as("phub"),
+        col("auth").as("pauth")), Seq("node"))
       .filter(col("hub") =!= col("phub") || col("auth") =!= col("pauth"))
       .count()
-    freeLoop()
-    Materialize.free(nodes, blocking = false)
-    e.unpersist(blocking = false)
-    certRow(edges, "hits", iters, changed)
+    g.close(certRow(edges, "hits", iters, changed))
   }
 
   /** Bounded-depth BFS: exact hop distance (0…maxHops) from a source
@@ -395,22 +298,23 @@ object Graphs {
     * absent.
     */
   def kHopDistances(edges: DataFrame, sources: DataFrame,
-      maxHops: Int): DataFrame =
-    kHopStates(edges, sources, maxHops)._1
+      maxHops: Int): DataFrame = {
+    val g = new Rounds(keep = Int.MaxValue) // dist unions every frontier
+    g.close(kHopStates(g, edges, sources, maxHops)._1)
+  }
 
   /** (distances, size of the final frontier) — the frontier counts
     * already ride as `observe` metrics on the per-round checkpoints,
     * so the convergence certificate is free: the last materialized
     * frontier holds exactly the nodes at `dist = maxHops` (or is
     * empty when the traversal exhausted early — same answer either
-    * way).
+    * way). The distances read every round `g` holds.
     */
-  private def kHopStates(edges: DataFrame, sources: DataFrame,
+  private def kHopStates(g: Rounds, edges: DataFrame, sources: DataFrame,
       maxHops: Int): (DataFrame, Long) = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = g.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
     // Per-round job budget matters here (bounded rounds of TINY jobs —
     // fixed per-job latency adds up): the frontier count rides as an
     // `observe` metric ON the materialization job (no separate isEmpty
@@ -418,7 +322,7 @@ object Graphs {
     // is a union of already-checkpointed frontiers, so its lineage is
     // O(rounds) unions over materialized RDDs (linear, not the
     // quadratic-lineage trap the frontier checkpoint guards against).
-    var (dist, n0) = ckptCounted(sources
+    var (dist, n0) = counted(g, sources
       .select(col(sources.columns(0)).as("node"))
       .distinct().withColumn("dist", lit(0L)))
     var frontier = dist
@@ -429,16 +333,12 @@ object Graphs {
         .select(e("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .withColumn("dist", lit(i.toLong))
-      val (ck, n) = ckptCounted(next)
+      val (ck, n) = counted(g, next)
       frontier = ck
       frontierN = n
       dist = dist.union(frontier)
       i += 1
     }
-    // dist reads only checkpointed frontiers; a cached edge table left
-    // behind would serve later reads of the same path (the cache
-    // matches plans by file path, not content)
-    e.unpersist(blocking = false)
     (dist, frontierN)
   }
 
@@ -495,29 +395,6 @@ object Graphs {
       .crossJoin(closed.agg(count(lit(1)).as("n_triangles")))
   }
 
-  /** Semi-supervised label propagation (Zhu & Ghahramani 2002 lineage;
-    * the synchronous, clamped-seed variant): seed nodes carry a fixed
-    * label; each round every NON-seed node adopts the majority label
-    * of its labeled in-neighbors, ties broken deterministically
-    * (highest count, then lowest label — no randomized update order,
-    * unlike classic LPA, so the whole trajectory is a pure function of
-    * the graph and replays bit-for-bit in an unrolled oracle).
-    * Synchronous rounds: round i votes use ONLY round i−1 labels.
-    *
-    * Input: a directed edge list `(src, dst)` (pass both directions
-    * for undirected semantics) and `seeds (node, label)`. Returns
-    * `(node, label, is_seed)` for every node labeled after `rounds`
-    * rounds; unreached nodes are absent.
-    *
-    * Shape at scale: each round is one O(edges) shuffle of
-    * `(dst, label)` votes with map-side combine onto the composite
-    * (node, label) key, then an O(nodes) argmax re-aggregation —
-    * the majority vote is `min(struct(−count, label))`, a 16-byte
-    * accumulator, NOT a per-node sorted window. Seeds clamp via an
-    * anti join (seed set is O(seeds), shuffled once per round).
-    * Label-table lineage is truncated each round (the iterative-state
-    * discipline of [[kHopDistances]]).
-    */
   /** Newman modularity of a node partition: `Q = Σ_c (e_c/m −
     * (d_c/2m)²)` over an UNDIRECTED distinct edge list `(u, v)` and a
     * `(node, label)` community assignment — the standard quality score
@@ -571,36 +448,51 @@ object Graphs {
         col("modularity"))
   }
 
+  /** Semi-supervised label propagation (Zhu & Ghahramani 2002 lineage;
+    * the synchronous, clamped-seed variant): seed nodes carry a fixed
+    * label; each round every NON-seed node adopts the majority label
+    * of its labeled in-neighbors, ties broken deterministically
+    * (highest count, then lowest label — no randomized update order,
+    * unlike classic LPA, so the whole trajectory is a pure function of
+    * the graph and replays bit-for-bit in an unrolled oracle).
+    * Synchronous rounds: round i votes use ONLY round i−1 labels.
+    *
+    * Input: a directed edge list `(src, dst)` (pass both directions
+    * for undirected semantics) and `seeds (node, label)`. Returns
+    * `(node, label, is_seed)` for every node labeled after `rounds`
+    * rounds; unreached nodes are absent.
+    *
+    * Shape at scale: each round is one O(edges) shuffle of
+    * `(dst, label)` votes with map-side combine onto the composite
+    * (node, label) key, then an O(nodes) argmax re-aggregation —
+    * the majority vote is `min(struct(−count, label))`, a 16-byte
+    * accumulator, NOT a per-node sorted window. Seeds clamp via an
+    * anti join (seed set is O(seeds), shuffled once per round).
+    * Label-table lineage is truncated each round (the iterative-state
+    * discipline of [[kHopDistances]]).
+    */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    val (_, labels, seed, e) = labelPropagationStates0(edges, seeds, rounds)
-    val out = labels
+    val g = new Rounds(keep = 1)
+    val (_, labels, seed) = labelPropagationStates(g, edges, seeds, rounds)
+    g.close(labels
       .join(seed.select(col("node"), lit(true).as("is_seed")),
         Seq("node"), "left")
       .na.fill(false, Seq("is_seed"))
-      .materialize()
-    e.unpersist(blocking = false)
-    out
+      .materialize())
   }
 
-  /** Last two label states — (round rounds−1, round rounds); both
-    * eagerly checkpointed so the convergence join is cheap.
+  /** (round rounds−1 labels, round rounds labels, the seed table): the
+    * last state reads the newest round `g` holds, the previous state
+    * the one before it (the seed table at rounds = 1).
     */
-  private def labelPropagationStates(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): (DataFrame, DataFrame) = {
-    val (prev, last, _, e) = labelPropagationStates0(edges, seeds, rounds)
-    e.unpersist(blocking = false)
-    (prev, last)
-  }
-
-  private def labelPropagationStates0(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  private def labelPropagationStates(g: Rounds, edges: DataFrame,
+      seeds: DataFrame, rounds: Int): (DataFrame, DataFrame, DataFrame) = {
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(col(edges.columns(0)).as("src"),
-      col(edges.columns(1)).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seed = seeds.select(col(seeds.columns(0)).as("node"),
-      col(seeds.columns(1)).as("label")).distinct().materialize()
+    val e = g.cache(edges.select(col(edges.columns(0)).as("src"),
+      col(edges.columns(1)).as("dst")))
+    val seed = g.hold(seeds.select(col(seeds.columns(0)).as("node"),
+      col(seeds.columns(1)).as("label")).distinct())
     var labels = seed
     var prev = labels
     for (_ <- 1 to rounds) {
@@ -613,11 +505,10 @@ object Graphs {
         .groupBy("dst")
         .agg(min(struct((col("cnt") * -1).as("nc"), col("label"))).as("m"))
         .select(col("dst").as("node"), col("m.label").as("label"))
-      labels = seed.unionAll(
-          inferred.join(seed.select("node"), Seq("node"), "left_anti"))
-        .materialize()
+      labels = g(seed.unionAll(
+        inferred.join(seed.select("node"), Seq("node"), "left_anti")))
     }
-    (prev, labels, seed, e)
+    (prev, labels, seed)
   }
 
   /** Bounded-round k-core peeling over a SYMMETRIC edge list (both
@@ -636,37 +527,39 @@ object Graphs {
     * O(edges) per round, no all-pairs anything; lineage truncates per
     * round (`localCheckpoint`) so plans stay flat at any round count.
     */
-  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kCoreStates(edges, k, rounds)._1
-      .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val g = new Rounds(keep = 1)
+    g.close(kCoreStates(g, edges, k, rounds)._1
+      .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree")))
+  }
 
-  /** Shared observe-count-on-materialization step (the
-    * [[Materialize.withMetrics]] pattern): row count rides
-    * on the checkpoint job — zero extra jobs for loop bookkeeping.
+  /** Materialize one round through `g` with its row count riding on
+    * the checkpoint job ([[Materialize.withMetrics]]) — zero extra
+    * jobs for loop bookkeeping.
     */
-  private def ckptCounted(df: DataFrame): (DataFrame, Long) = {
-    val (ck, m) = Materialize.withMetrics(df,
-      count(lit(1)).as("n"))
+  private def counted(g: Rounds, df: DataFrame): (DataFrame, Long) = {
+    val (ck, m) = g.withMetrics(df, count(lit(1)).as("n"))
     (ck, m("n").asInstanceOf[Long])
   }
 
   /** Final peeling state — (round rounds edges, round rounds−1 edge
     * count, round rounds edge count); counts ride as `observe` metrics
     * on the per-round checkpoints (the [[kHopDistances]] discipline),
-    * so the convergence report costs ZERO extra jobs.
+    * so the convergence report costs ZERO extra jobs. The edges read
+    * the newest round `g` holds.
     */
-  private def kCoreStates(edges: DataFrame, k: Int,
+  private def kCoreStates(g: Rounds, edges: DataFrame, k: Int,
       rounds: Int): (DataFrame, Long, Long) = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    var (e, n) = ckptCounted(edges.select(
+    var (e, n) = counted(g, edges.select(
       col(edges.columns(0)).as("src"), col(edges.columns(1)).as("dst")))
     var prevN = n
     for (_ <- 1 to rounds) {
       prevN = n
       val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
-      val next = ckptCounted(e
+      val next = counted(g, e
         .join(keep.select(col("node").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("node").as("dst")), Seq("dst"), "left_semi")
         .select("src", "dst"))
@@ -689,8 +582,9 @@ object Graphs {
     * already ride as `observe` metrics on the peel's checkpoints.
     */
   def kCoreReport(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val (_, prevN, lastN) = kCoreStates(edges, k, rounds)
-    certRow(edges, "kcore", rounds, prevN - lastN)
+    val g = new Rounds(keep = 1)
+    val (_, prevN, lastN) = kCoreStates(g, edges, k, rounds)
+    g.close(certRow(edges, "kcore", rounds, prevN - lastN))
   }
 
   /** Convergence certificate for bounded-round [[labelPropagation]]:
@@ -704,13 +598,14 @@ object Graphs {
     */
   def labelPropagationReport(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    val (prev, last) = labelPropagationStates(edges, seeds, rounds)
+    val g = new Rounds(keep = 2)
+    val (prev, last, _) = labelPropagationStates(g, edges, seeds, rounds)
     val changed = last.select(col("node"), col("label"))
       .join(prev.select(col("node"), col("label").as("__prev")),
         Seq("node"), "left")
       .filter(not(col("label") <=> col("__prev")))
       .count()
-    certRow(edges, "labelprop", rounds, changed)
+    g.close(certRow(edges, "labelprop", rounds, changed))
   }
 
   /** Convergence certificate for bounded-depth [[kHopDistances]]:
@@ -722,8 +617,11 @@ object Graphs {
     * checkpoints, so the certificate costs no job beyond the BFS.
     */
   def kHopReport(edges: DataFrame, sources: DataFrame,
-      maxHops: Int): DataFrame =
-    certRow(edges, "bfs", maxHops, kHopStates(edges, sources, maxHops)._2)
+      maxHops: Int): DataFrame = {
+    val g = new Rounds(keep = Int.MaxValue) // dist unions every frontier
+    g.close(certRow(edges, "bfs", maxHops,
+      kHopStates(g, edges, sources, maxHops)._2))
+  }
 
   // ------------------------------------------------------------- SCC
 
@@ -740,11 +638,13 @@ object Graphs {
     * of O(depth) — the difference between a 14-deep acyclic fringe
     * costing 14 shuffled rounds and costing 5. Every leaf of the round
     * plan is a checkpoint scan or the materialized edge table, so
-    * nothing recomputes; superseded rounds free eagerly.
+    * nothing recomputes; superseded rounds free eagerly. The returned
+    * labels read the last round, which passes to the caller to free.
     */
   private def minLabelFixpoint(e: DataFrame, nodes: DataFrame,
       maxIter: Int): DataFrame = {
-    var f = nodes.select(col("node"), col("node").as("f")).materialize()
+    val g = new Rounds(keep = 1)
+    var f = g(nodes.select(col("node"), col("node").as("f")))
     var rounds = 0
     var changed = 1L
     while (changed > 0) {
@@ -770,15 +670,14 @@ object Graphs {
         .join(jump, col("f1") === col("jn"), "left")
         .select(col("node"), col("f"),
           least(col("f1"), coalesce(col("jf"), col("f1"))).as("nf"))
-      val (ck, m) = Materialize.withMetrics(
+      val (ck, m) = g.withMetrics(
         stepped.select(col("node"), col("nf").as("__nf"),
           (col("nf") < col("f")).as("__chg")),
         sum(when(col("__chg"), 1L).otherwise(0L)).as("c"))
       changed = Option(m("c")).fold(0L)(_.asInstanceOf[Long])
-      Materialize.free(f, blocking = true)
       f = ck.select(col("node"), col("__nf").as("f"))
     }
-    f
+    g.close(f)
   }
 
   /** Iterative Tarjan (1972) over a driver-resident edge list —
@@ -866,8 +765,11 @@ object Graphs {
       maxIter: Int = 60, collectThreshold: Int = 4096): DataFrame = {
     require(edges.columns.length >= 2,
       "edges must have the two id columns first")
+    // every round this call materializes stays until the output does:
+    // the settled parts read every peel's labels
+    val g = new Rounds(keep = Int.MaxValue)
     val ids = edges.columns
-    val (e0, nEdges) = ckptCounted(
+    val (e0, nEdges) = counted(g,
       edges.select(col(ids(0)).cast("long").as("src"),
         col(ids(1)).cast("long").as("dst")).distinct())
     // Bounded-collect fast path (the repo's k-means-codebook
@@ -881,18 +783,12 @@ object Graphs {
       val spark = edges.sparkSession
       import spark.implicits._
       val el = e0.as[(Long, Long)].collect()
-      val out = spark.createDataFrame(tarjanScc(el).toSeq)
-        .toDF("node", "scc")
-      Materialize.free(e0, blocking = false)
-      return out
+      return g.close(spark.createDataFrame(tarjanScc(el).toSeq)
+        .toDF("node", "scc"))
     }
-    var nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct().materialize()
-    var rem = e0.filter(col("src") =!= col("dst")).materialize()
-    // every checkpoint this loop creates, freed AFTER the output
-    // materializes (settled parts are narrow views over the per-peel
-    // label checkpoints)
-    var owned: List[DataFrame] = List(e0, nodes, rem)
+    var nodes = g(e0.select(col("src").as("node"))
+      .union(e0.select(col("dst").as("node"))).distinct())
+    var rem = g(e0.filter(col("src") =!= col("dst")))
     var settledParts: List[DataFrame] = Nil
     var nLeft = nodes.count()
     var peel = 0
@@ -905,14 +801,13 @@ object Graphs {
       val b = minLabelFixpoint(
         rem.select(col("dst").as("src"), col("src").as("dst")),
         nodes, maxIter)
-      val lbl = f.join(b.select(col("node"), col("f").as("b")),
-        Seq("node")).materialize()
-      Materialize.free(f, blocking = true); Materialize.free(b, blocking = true)
-      owned ::= lbl
+      val lbl = g(f.join(b.select(col("node"), col("f").as("b")),
+        Seq("node")))
+      Materialize.free(f, blocking = false)
+      Materialize.free(b, blocking = false)
       settledParts ::= lbl.filter(col("f") === col("b"))
         .select(col("node"), col("f").as("scc"))
-      val (kept, nKept) = ckptCounted(lbl.filter(col("f") =!= col("b")))
-      owned ::= kept
+      val (kept, nKept) = counted(g, lbl.filter(col("f") =!= col("b")))
       nLeft = nKept
       if (nKept > 0) {
         nodes = kept.select(col("node"))
@@ -920,17 +815,15 @@ object Graphs {
           col("b").as("sb"))
         val dl = kept.select(col("node").as("dn"), col("f").as("df"),
           col("b").as("db"))
-        rem = rem.join(sl, rem("src") === col("sn"))
+        rem = g(rem.join(sl, rem("src") === col("sn"))
           .join(dl, rem("dst") === col("dn"))
           .filter(col("sf") === col("df") && col("sb") === col("db"))
-          .select(col("src"), col("dst")).materialize()
-        owned ::= rem
+          .select(col("src"), col("dst")))
       }
     }
     if (settledParts.isEmpty) // edge-less input: empty graph, empty out
-      return e0.select(col("src").as("node"), col("dst").as("scc")).limit(0)
-    val out = settledParts.reduce(_ unionAll _).materialize()
-    owned.foreach(Materialize.free(_, blocking = false))
-    out
+      return g.close(e0.select(col("src").as("node"), col("dst").as("scc"))
+        .limit(0))
+    g.close(settledParts.reduce(_ unionAll _).materialize())
   }
 }

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Pluggable lineage-truncation point for every iterative / fan-out
   * operator in the engine (connected-components rounds, HITS
@@ -30,8 +31,10 @@ import org.apache.spark.sql.Dataset
   * after `materialize()` the result is computed, its lineage is
   * truncated, and superseded rounds can be freed.
   *
-  * Callers that free superseded rounds through [[free]]
-  * (connectedComponents, hits) stay correct in durable mode: reliable
+  * Round loops keep their bookkeeping in one [[Rounds]] tracker per
+  * call: it materializes each round, frees the rounds a loop no longer
+  * reads, and frees what is left once the caller is done. It and every
+  * other caller of [[free]] stay correct in durable mode: reliable
   * checkpoints don't register persistent RDDs, so the free is a no-op
   * — retention is handed to the checkpoint-dir cleanup discipline
   * instead.
@@ -94,6 +97,70 @@ object Materialize {
   def free(sc: org.apache.spark.SparkContext, ids: Set[Int],
       blocking: Boolean): Unit =
     ids.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking)))
+
+  /** One loop call's materialized state, the single place a round
+    * loop keeps its bookkeeping. Each round goes through [[apply]] or
+    * [[withMetrics]]: it is materialized and its [[rddIds]] recorded,
+    * and rounds older than the last `keep` are freed (a materialized
+    * round is computed, so a later round never reads an earlier one
+    * through it). Tables every round reads are [[hold]] (materialized)
+    * or [[cache]] (persisted, filled by their first consumer); they
+    * live until [[close]], which frees everything the loop's output
+    * does not read. Each call makes its own tracker and frees only the
+    * ids it recorded, so loops running on other threads never lose a
+    * block. Not thread-safe: one loop drives it.
+    */
+  final class Rounds(keep: Int) {
+    require(keep >= 1, "keep must be >= 1")
+    private var rounds = Vector.empty[Set[Int]] // oldest first
+    private var held = Set.empty[Int]
+    private var cached = List.empty[Dataset[_]]
+
+    /** Persist an input every round reads; unpersisted by [[close]]. */
+    def cache[T](ds: Dataset[T]): Dataset[T] = {
+      cached ::= ds.persist(StorageLevel.MEMORY_AND_DISK)
+      ds
+    }
+
+    /** Materialize a table every round reads; freed by [[close]]. */
+    def hold[T](ds: Dataset[T]): Dataset[T] = {
+      val ck = Materialize(ds)
+      held ++= rddIds(ck)
+      ck
+    }
+
+    /** Materialize one round. */
+    def apply[T](ds: Dataset[T]): Dataset[T] = record(Materialize(ds))
+
+    /** Materialize one round with its observed metrics
+      * ([[Materialize.withMetrics]]).
+      */
+    def withMetrics[T](ds: Dataset[T], first: org.apache.spark.sql.Column,
+        rest: org.apache.spark.sql.Column*): (Dataset[T], Map[String, Any]) = {
+      val (ck, m) = Materialize.withMetrics(ds, first, rest: _*)
+      (record(ck), m)
+    }
+
+    private def record[T](ck: Dataset[T]): Dataset[T] = {
+      rounds :+= rddIds(ck)
+      if (rounds.size > keep) {
+        free(ck.sparkSession.sparkContext, rounds.head, blocking = false)
+        rounds = rounds.tail
+      }
+      ck
+    }
+
+    /** The loop is done: free every round and held table that `out`
+      * does not read, unpersist the caches, and return `out`. What
+      * `out` reads passes to its caller.
+      */
+    def close[T](out: Dataset[T]): Dataset[T] = {
+      free(out.sparkSession.sparkContext,
+        (rounds.flatten ++ held).toSet -- rddIds(out), blocking = false)
+      cached.foreach(_.unpersist(blocking = false))
+      out
+    }
+  }
 
   /** Postfix syntax: `df.materialize()` reads like the
     * `localCheckpoint()` calls it replaces.

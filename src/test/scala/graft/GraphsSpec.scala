@@ -1,6 +1,9 @@
 package graft
 
 import graft.operators.Graphs
+import graft.plans.Materialize
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 
 /** Integer PageRank: exact hand-computed fixtures (the whole point of
   * integer arithmetic is that these are bit-exact, not approximate).
@@ -427,5 +430,91 @@ class GraphsSpec extends SparkSpec {
     val conv = rows("graph_convergence")
     assert(conv.exists(_ == (("kcore", 3L, 228L, false))), conv)
     assert(conv == rows("graph_convergence", Paths.get(sf001)))
+  }
+
+  // ------------------------------------------------------ round hygiene
+
+  /** One seeded random directed graph (no self-loops) and its
+    * symmetric closure, for the specs below.
+    */
+  private def randomGraph(seed: Int, n: Int, m: Int): (DataFrame, DataFrame) = {
+    val rnd = new scala.util.Random(seed)
+    val directed = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    (directed.toDF("src", "dst"),
+      (directed ++ directed.map(_.swap)).distinct.toDF("src", "dst"))
+  }
+
+  private def noop(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  test("every graph loop leaves only the RDDs its output reads; a report leaves none") {
+    val (directed, sym) = randomGraph(seed = 17, n = 40, m = 110)
+    val sources = Seq(Tuple1(0L), Tuple1(5L)).toDF("node")
+    val labels = Seq(1L -> "a", 7L -> "b", 20L -> "c").toDF("node", "label")
+    // (name, is a certificate, run); PageRank runs past its 5-round
+    // checkpoint and HITS past one generation so rounds are superseded
+    val ops: Seq[(String, Boolean, () => DataFrame)] = Seq(
+      ("pageRank", false, () => Graphs.pageRank(sym, iters = 7)),
+      ("personalizedPageRank", false,
+        () => Graphs.personalizedPageRank(sym, sources, iters = 7)),
+      ("pageRankReport", true, () => Graphs.pageRankReport(sym, iters = 7)),
+      ("hits", false, () => Graphs.hits(directed, iters = 3)),
+      ("hitsReport", true, () => Graphs.hitsReport(directed, iters = 3)),
+      ("kHopDistances", false, () => Graphs.kHopDistances(sym, sources, maxHops = 3)),
+      ("kHopReport", true, () => Graphs.kHopReport(sym, sources, maxHops = 3)),
+      ("labelPropagation", false, () => Graphs.labelPropagation(sym, labels, rounds = 3)),
+      ("labelPropagationReport", true,
+        () => Graphs.labelPropagationReport(sym, labels, rounds = 3)),
+      ("kCore", false, () => Graphs.kCore(sym, k = 3, rounds = 3)),
+      ("kCoreReport", true, () => Graphs.kCoreReport(sym, k = 3, rounds = 3)),
+      ("stronglyConnectedComponents", false,
+        () => Graphs.stronglyConnectedComponents(directed, collectThreshold = 0)))
+    val leaks = ops.flatMap { case (name, isReport, run) =>
+      val before = persisted
+      val out = run()
+      noop(out)
+      val left = persisted -- before
+      val reads = if (isReport) Set.empty[Int] else Materialize.rddIds(out)
+      Materialize.free(spark.sparkContext, left, blocking = true)
+      if (left == reads) None
+      else Some(s"$name left ${left.size} RDDs, its output reads ${reads.size}")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
+
+  test("hits compiles no new classes for a new graph once warm") {
+    // The observed maxima reach the plan as data: the generated code
+    // is the same for every graph of the same shape. Every compile is
+    // one sample of CodegenMetrics.METRIC_COMPILATION_TIME.
+    noop(Graphs.hits(randomGraph(seed = 3, n = 30, m = 80)._1, iters = 3))
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    noop(Graphs.hits(randomGraph(seed = 4, n = 30, m = 80)._1, iters = 3))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"hits on a second graph compiled $compiled classes")
+  }
+
+  test("two graph loops on two threads free only their own rounds") {
+    // graph_fixpoint_delta's shape: both certificates over one
+    // materialized edge table, here run at once. A loop freeing by a
+    // global diff would take the other thread's rounds for its own.
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val edges = Materialize(randomGraph(seed = 29, n = 60, m = 200)._2)
+    val runs: Seq[() => Seq[org.apache.spark.sql.Row]] = Seq(
+      () => Graphs.pageRankReport(edges, iters = 12).collect().toSeq,
+      () => Graphs.hitsReport(edges, iters = 6).collect().toSeq)
+    val alone = runs.map(_())
+    val before = persisted
+    val together = Await.result(Future.sequence(runs.map(r => Future(r()))),
+      5.minutes)
+    assert(together == alone)
+    assert(persisted -- before == Set.empty[Int], "a loop left its rounds behind")
+    assert(Materialize.rddIds(edges).subsetOf(persisted),
+      "a loop freed the shared edge table")
+    Materialize.free(edges, blocking = true)
   }
 }
