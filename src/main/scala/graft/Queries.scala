@@ -1,5 +1,5 @@
 package graft
-import graft.plans.Materialize.MaterializeOps
+import graft.plans.Materialize.{MaterializeOps, Rounds}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -876,12 +876,14 @@ object Queries {
     * EXACT convergence (further rounds provably identical).
     *
     * Both certificates are computed from the data at `dir` over one
-    * shared materialized edge table, whatever ran before.
+    * shared materialized edge table, whatever ran before; the table is
+    * freed once both are built (they are literal rows).
     */
   val graphFixpointDelta: Q = (s, dir) => {
-    val edges = tradeEdges(s, dir).materialize()
-    graft.operators.Graphs.pageRankReport(edges, iters = PrIters)
-      .union(graft.operators.Graphs.hitsReport(edges, iters = HitsIters))
+    val held = new Rounds(keep = 1)
+    val edges = held.hold(tradeEdges(s, dir))
+    held.close(graft.operators.Graphs.pageRankReport(edges, iters = PrIters)
+      .union(graft.operators.Graphs.hitsReport(edges, iters = HitsIters)))
   }
 
   /** Extension — bounded BFS: exact hop distance from customer 0 to
@@ -951,16 +953,19 @@ object Queries {
     * over states the loop already checkpointed. All three are
     * computed from the data at `dir`, whatever ran before; the
     * co-purchase edges feeding both kCore and LPA are materialized
-    * once (Catalyst shares no subtrees).
+    * once (Catalyst shares no subtrees) and freed once all three
+    * certificates are built.
     */
   val graphConvergence: Q = (s, dir) => {
-    val coEdges = coPurchaseEdges(s, dir).materialize()
+    val held = new Rounds(keep = 1)
+    val coEdges = held.hold(coPurchaseEdges(s, dir))
     val src = s.range(1).select(lit(0L).as("node"))
-    graft.operators.Graphs.kCoreReport(coEdges, k = KcoreK, rounds = KcoreRounds)
+    held.close(graft.operators.Graphs.kCoreReport(coEdges, k = KcoreK,
+        rounds = KcoreRounds)
       .union(graft.operators.Graphs.labelPropagationReport(coEdges,
         brandSeeds(s, dir), rounds = LpaRounds))
       .union(graft.operators.Graphs.kHopReport(tradeEdges(s, dir), src,
-        maxHops = BfsHops))
+        maxHops = BfsHops)))
   }
 
   /** Extension — modularity of the propagated-label partition over

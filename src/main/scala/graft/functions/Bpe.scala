@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.plans.Materialize.Rounds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -115,43 +116,36 @@ object Bpe {
   }
 
   /** Learn `numMerges` BPE merges from the corpus. The returned list
-    * is rank-ordered — the tokenizer artifact. Each round persists the
-    * rewritten vocab and unpersists the previous one (lineage stays
-    * one round deep; the table is ≤ vocabCap rows throughout).
+    * is rank-ordered — the tokenizer artifact. Each rewritten vocab is
+    * materialized and the one it supersedes freed (lineage stays one
+    * round deep; the table is ≤ vocabCap rows throughout).
     */
   def trainBpe(docs: DataFrame, numMerges: Int,
       vocabCap: Int = 65536): Seq[(String, String)] =
     trainLoop(wordCounts(docs, vocabCap)
       .select(initialSymbols(col("word")).as("symbols"), col("n")),
-      numMerges)
+      numMerges)(trainRound)
 
-  /** The round loop shared by the char and byte trainers: the seed
-    * symbolization is the ONLY thing that differs — `trainRound`'s
-    * pair statistics and merge application are symbol-agnostic.
+  /** The round loop of every BPE-family trainer (char and byte BPE,
+    * WordPiece): the seed symbolization and the round function are
+    * the only things that differ. `round` picks one merge and returns
+    * it with the rewritten vocab, or None when no pairs remain. The
+    * seed vocab is cached, each rewritten vocab materialized; all of it
+    * is freed when the loop ends.
     */
-  private def trainLoop(vocab0: DataFrame,
-      numMerges: Int): Seq[(String, String)] = {
-    var vocab = vocab0
-    vocab.persist()
-    val merges = Seq.newBuilder[(String, String)]
+  private[functions] def trainLoop[M](vocab0: DataFrame, numMerges: Int)(
+      round: DataFrame => Option[(M, DataFrame)]): Seq[M] = {
+    val rounds = new Rounds(keep = 1)
     try {
-      var i = 0
-      var exhausted = false
-      while (i < numMerges && !exhausted) {
-        trainRound(vocab) match {
-          case Some((pair, next)) =>
-            merges += pair
-            next.persist()
-            // materialize before dropping the parent
-            next.count()
-            vocab.unpersist()
-            vocab = next
-          case None => exhausted = true
-        }
-        i += 1
+      val merges = scala.collection.mutable.ArrayBuffer.empty[M]
+      var next = if (numMerges > 0) round(rounds.cache(vocab0)) else None
+      while (next.isDefined) {
+        val (m, vocab) = next.get
+        merges += m
+        next = if (merges.size < numMerges) round(rounds(vocab)) else None
       }
-      merges.result()
-    } finally vocab.unpersist()
+      merges.toSeq
+    } finally rounds.close()
   }
 
   /** Frequency-capped distinct-PIECE counts — the byte face of
@@ -182,7 +176,7 @@ object Bpe {
     trainLoop(pieceCounts(docs, vocabCap)
       .select(call_function("graft_byte_syms", col("piece")).as("symbols"),
         col("n")),
-      numMerges)
+      numMerges)(trainRound)
   }
 
   /** Encode a text column with a trained merge list: lowercase,

@@ -1,5 +1,5 @@
 package graft.functions
-import graft.plans.Materialize.MaterializeOps
+import graft.plans.Materialize.{MaterializeOps, Rounds}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -1482,16 +1482,12 @@ object Dedup {
     * Singleton docs (no pairs) are their own component by definition
     * and are not emitted.
     *
-    * Block retention: the returned DataFrame's lineage roots at the
-    * FINAL round's localCheckpoint, so that one edge-set copy stays in
-    * executor storage while the caller can still recompute the result
-    * (every superseded round is freed eagerly inside the loop). Once
-    * the caller drops the DataFrame, Spark's ContextCleaner unpersists
-    * the blocks on the next driver GC — retention is bounded by the
-    * result's reachability, not the SparkContext's lifetime. Callers
-    * that materialize the result and want the storage back immediately
-    * can `result.rdd.unpersist()`-equivalent by snapshotting
-    * (`write`/`collect`) and dropping the reference.
+    * Ownership: every round goes through one
+    * [[graft.plans.Materialize.Rounds]] tracker, which frees each
+    * superseded round as soon as the next one is materialized. When the
+    * loop ends, the only persisted RDDs left are those the returned
+    * DataFrame reads (the final round's edge set); they pass to the
+    * caller, who frees them with `Materialize.free` when done.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     require(pairs.columns.length >= 2,
@@ -1499,20 +1495,14 @@ object Dedup {
     val ids = pairs.columns
     val spark = pairs.sparkSession
     import spark.implicits._
-    // localCheckpoint blocks are persisted RDDs (not CacheManager
-    // entries — Dataset.unpersist can't free them, and waiting on
-    // GC-driven ContextCleaner cleanup would let several full edge-set
-    // copies pile up over many rounds). Each round frees exactly the
-    // RDDs backing the round it supersedes (`Materialize.free`), so
-    // a checkpoint another thread takes meanwhile is never touched.
-    var edges = pairs
+    val rounds = new Rounds(keep = 1)
+    var edges = rounds(pairs
       .select(col(ids(0)).cast("long").as("a"), col(ids(1)).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
       .as[(Long, Long)]
       .mapPartitions(contractStars(_, ContractCap))
       .toDF("u", "v")
-      .distinct()
-      .materialize()
+      .distinct())
     // Star forest ⇔ no node has two out-edges and no node is both a
     // child (u) and a parent (v).
     def isStarForest(e: DataFrame): Boolean =
@@ -1542,18 +1532,15 @@ object Dedup {
       // Small-star: each node re-points its smaller neighbors (and
       // itself) at the minimum of them.
       val smins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val small = large.join(smins, "u")
+      edges = rounds(large.join(smins, "u")
         .select(col("v").as("u"), col("m").as("v"))
         .union(smins.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
-        .distinct()
-        .materialize()
-      graft.plans.Materialize.free(edges, blocking = false)
-      edges = small
+        .distinct())
       it += 1
     }
-    edges.select(col("u").as("doc_id"), col("v").as("component"))
-      .union(edges.select(col("v"), col("v")).distinct())
+    rounds.close(edges.select(col("u").as("doc_id"), col("v").as("component"))
+      .union(edges.select(col("v"), col("v")).distinct()))
   }
 
   /** Entries one [[contractStars]] call holds before it flushes, so a

@@ -1,7 +1,7 @@
 package graft.functions
-import graft.plans.Materialize.MaterializeOps
+import graft.plans.Materialize.{MaterializeOps, Rounds}
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -263,65 +263,55 @@ object Similarity {
     * k-center objective's trajectory; rank 1 = 0), so the caller reads
     * coverage quality straight off the result.
     *
-    * Scale shape: the min-distance state table carries (vec_id, q, d)
-    * and is updated MAP-ONLY against the one newest center per round
-    * (the center's vector rides as a literal — the [[kmeansAssign]]
-    * convention); the per-round argmax is a distributed TakeOrdered
-    * (limit 1), and the driver ever holds k rows. O(k·corpus) total
-    * work, k bounded — never all-pairs, nothing corpus-scale
-    * collected. Superseded round states free eagerly.
+    * Scale shape: the min-distance state table carries (vec_id, q,
+    * nsq, d) and is updated MAP-ONLY against the one newest center per
+    * round. Every state is a round of one
+    * [[graft.plans.Materialize.Rounds]] tracker, and its farthest row
+    * (max d, ties to the lowest vec_id) is observed on that round's
+    * own materialization job, so a pick costs no job of its own. The
+    * center (id, vector, squared norm) reaches the next round as one
+    * struct-valued scalar subquery over a one-row local relation:
+    * data, not literals, so a new corpus compiles no new classes
+    * (generated code inlines a primitive subquery result, but reads a
+    * struct from its reference array). The driver ever holds k rows.
+    * O(k·corpus) total work, k bounded — never all-pairs, nothing
+    * corpus-scale collected. Every state is freed before returning.
     */
   def kCenterCoreset(embeddings: DataFrame, k: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     val spark = embeddings.sparkSession
+    import spark.implicits._
     graft.plans.GraftFunctions.register(spark)
-    val quant = embeddings.select(
+    val rounds = new Rounds(keep = 1)
+    var state: DataFrame = null
+    // materialize the next state; its farthest row, None when it is empty
+    def round(next: DataFrame): Option[Row] = {
+      val (ck, m) = rounds.withMetrics(next,
+        max(struct(col("d"), -col("vec_id"), col("q"), col("nsq"))).as("far"))
+      state = ck
+      Option(m("far").asInstanceOf[Row])
+    }
+    // every d starts unbounded, so the first farthest row is the seed:
+    // the minimum vec_id
+    var far = round(embeddings.select(
       col("vec_id"), quantized(col("embedding")).as("q"),
     ).withColumn("nsq", call_function("graft_norm_sq", col("q")))
-      .materialize()
-    val seed = quant.orderBy(col("vec_id")).limit(1)
-      .collect().headOption
+      .withColumn("d", lit(Long.MaxValue)))
     val picked = scala.collection.mutable.ArrayBuffer[(Int, Long, Long)]()
-    seed.foreach { s =>
-      var centerId = s.getLong(0)
-      var centerVec = s.getSeq[Long](1).toArray
-      var centerNsq = s.getLong(2)
-      picked += ((1, centerId, 0L))
-      def distToCenter: Column =
-        col("nsq") + lit(centerNsq) - lit(2L) *
-          call_function("graft_dot", col("q"),
-            array(centerVec.map(lit).toIndexedSeq: _*))
-      var state = quant.filter(col("vec_id") =!= centerId)
-        .select(col("vec_id"), col("q"), col("nsq"),
-          distToCenter.as("d"))
-        .materialize()
-      var rank = 2
-      var empty = false
-      while (rank <= k && !empty) {
-        state.orderBy(col("d").desc, col("vec_id")).limit(1)
-          .collect().headOption match {
-          case None => empty = true
-          case Some(far) =>
-            centerId = far.getLong(0)
-            centerVec = far.getSeq[Long](1).toArray
-            centerNsq = far.getLong(2)
-            picked += ((rank, centerId, far.getLong(3)))
-            if (rank < k) {
-              val next = state.filter(col("vec_id") =!= centerId)
-                .select(col("vec_id"), col("q"), col("nsq"),
-                  least(col("d"), distToCenter).as("d"))
-                .materialize()
-              graft.plans.Materialize.free(state, blocking = false)
-              state = next
-            }
-            rank += 1
-        }
+    while (far.isDefined) {
+      val f = far.get
+      val rank = picked.size + 1
+      picked += ((rank, -f.getLong(1), if (rank == 1) 0L else f.getLong(0)))
+      far = if (rank == k) None else {
+        val center = Seq((-f.getLong(1), f.getSeq[Long](2), f.getLong(3)))
+          .toDF("id", "q", "nsq").select(struct("id", "q", "nsq")).scalar()
+        val dist = col("nsq") + center.getField("nsq") - lit(2L) *
+          call_function("graft_dot", col("q"), center.getField("q"))
+        round(state.filter(col("vec_id") =!= center.getField("id"))
+          .select(col("vec_id"), col("q"), col("nsq"), least(col("d"), dist).as("d")))
       }
-      graft.plans.Materialize.free(state, blocking = false)
     }
-    graft.plans.Materialize.free(quant, blocking = false)
-    import spark.implicits._
-    picked.toSeq.toDF("rank", "vec_id", "dist_sq")
+    rounds.close(picked.toSeq.toDF("rank", "vec_id", "dist_sq"))
   }
 
   /** Random-hyperplane signature: p sign bits packed into a long. The
@@ -551,9 +541,20 @@ object Similarity {
       .orderBy(col("__h")).limit(nlist)
       .select(col("q")).collect()
       .map(_.getSeq[Long](0).toArray)
+    kmeansRounds(train, init, iters)((s, n) => math.round(s.toDouble / n))
+  }
+
+  /** The k-means round body both trainers share: `iters` rounds that
+    * assign every vector to its [[cellOf]] cell (exact-integer argmin,
+    * ties to the lowest cell), sum each (cell, dim) exactly in one
+    * map-combined aggregate, and collect the nlist×dim sums. `mean`
+    * turns a (sum, count) into the new coordinate; an empty cell
+    * keeps its centroid.
+    */
+  private def kmeansRounds(train: DataFrame, init: Array[Array[Long]],
+      iters: Int)(mean: (Long, Long) => Long): Array[Array[Long]] =
     (1 to iters).foldLeft(init) { (centroids, _) =>
-      val assigned = train.withColumn("__cell", cellOf(col("q"), centroids))
-      val sums = assigned
+      val sums = train.withColumn("__cell", cellOf(col("q"), centroids))
         .select(col("__cell"), posexplode(col("q")).as(Seq("__pos", "__v")))
         .groupBy(col("__cell"), col("__pos"))
         .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
@@ -562,13 +563,11 @@ object Similarity {
       centroids.indices.map { cell =>
         byCell.get(cell) match {
           case Some(rows) =>
-            rows.sortBy(_.getInt(1)).map(r =>
-              math.round(r.getLong(2).toDouble / r.getLong(3))).toArray
-          case None => centroids(cell) // empty cell keeps its centroid
+            rows.sortBy(_.getInt(1)).map(r => mean(r.getLong(2), r.getLong(3)))
+          case None => centroids(cell)
         }
       }.toArray
     }
-  }
 
   /** IVF ANN (the other scale path besides LSH): the corpus is
     * partitioned into `nlist` Voronoi cells around k-means centroids;
@@ -1529,37 +1528,12 @@ object Similarity {
       Array.tabulate(m) { j =>
         val sub = res.select(col("vec_id"),
           slice(col("q"), j * dsub + 1, dsub).as("q"))
-        kmeansRefineExact(sub, init(j), iters)
+        kmeansRounds(sub, init(j), iters) { (s, n) =>
+          if (s >= 0L) (2L * s + n) / (2L * n) else -((-2L * s + n) / (2L * n))
+        }
       }
     } finally res.unpersist()
   }
-
-  /** The exact-integer EM rounds behind [[seededTrainedResidualCodebooks]]:
-    * explicit init, portable update rounding. Kept separate from
-    * [[kmeansCentroids]] on purpose — that one's init/rounding match
-    * the production (sampled, non-replayable) path and are pinned by
-    * existing specs.
-    */
-  private def kmeansRefineExact(sub: DataFrame, init: Array[Array[Long]],
-      iters: Int): Array[Array[Long]] =
-    (1 to iters).foldLeft(init) { (cent, _) =>
-      val sums = sub.withColumn("__cell", cellOf(col("q"), cent))
-        .select(col("__cell"), posexplode(col("q")).as(Seq("__pos", "__v")))
-        .groupBy(col("__cell"), col("__pos"))
-        .agg(sum(col("__v")).as("__s"), count(lit(1)).as("__n"))
-        .collect()
-      val byCell = sums.groupBy(_.getInt(0))
-      cent.indices.map { cell =>
-        byCell.get(cell) match {
-          case Some(rows) => rows.sortBy(_.getInt(1)).map { r =>
-            val s = r.getLong(2); val n = r.getLong(3)
-            if (s >= 0L) (2L * s + n) / (2L * n)
-            else -((-2L * s + n) / (2L * n))
-          }.toArray
-          case None => cent(cell)
-        }
-      }.toArray
-    }
 
   /** IVF + PQ composition (FAISS's IVFPQ): the coarse quantizer prunes
     * the scan to the query's `nprobe` nearest seed-centroid cells;

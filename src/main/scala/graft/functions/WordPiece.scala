@@ -116,33 +116,14 @@ object WordPiece {
     * count, frequency-capped at `vocabCap`), then every round runs
     * over the ≤`vocabCap`-row word table with one 1-row driver
     * collect (the argmax) — k merges cost k bounded shuffles
-    * regardless of corpus size. Each round persists the rewritten
-    * vocab and frees the superseded one (lineage stays a round deep).
+    * regardless of corpus size. The rounds run on [[Bpe.trainLoop]],
+    * the loop every BPE-family trainer shares.
     */
   def trainWordPiece(docs: DataFrame, numMerges: Int,
-      vocabCap: Int = 65536): Seq[WpMerge] = {
-    var vocab = Bpe.wordCounts(docs, vocabCap)
-      .select(initialPieces(col("word")).as("symbols"), col("n"))
-    vocab.persist()
-    val merges = Seq.newBuilder[WpMerge]
-    try {
-      var i = 0
-      var exhausted = false
-      while (i < numMerges && !exhausted) {
-        trainRound(vocab) match {
-          case Some((m, next)) =>
-            merges += m
-            next.persist()
-            next.count() // materialize before dropping the parent
-            vocab.unpersist()
-            vocab = next
-          case None => exhausted = true
-        }
-        i += 1
-      }
-      merges.result()
-    } finally vocab.unpersist()
-  }
+      vocabCap: Int = 65536): Seq[WpMerge] =
+    Bpe.trainLoop(Bpe.wordCounts(docs, vocabCap)
+      .select(initialPieces(col("word")).as("symbols"), col("n")),
+      numMerges)(trainRound)
 
   /** The vocabulary a trained merge list induces for [[encode]]:
     * every single-character piece (word-start and `##` continuation —

@@ -4,9 +4,8 @@ import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
 /** Pluggable lineage-truncation point for every iterative / fan-out
-  * operator in the engine (connected-components rounds, HITS
-  * half-steps, APSS prefix tables, shared subtrees feeding 2+
-  * consumers — Catalyst never shares subtrees, so a DataFrame with
+  * operator in the engine (round loops, and shared subtrees feeding
+  * 2+ consumers — Catalyst never shares subtrees, so a DataFrame with
   * multiple consumers must be materialized once or its upstream
   * re-executes per consumer).
   *
@@ -64,8 +63,7 @@ object Materialize {
     * per-round count / max / signature pay ZERO extra jobs for it.
     * Returns the materialized dataset and the observed metric row as
     * a name→value map (aggregates over zero rows observe as null —
-    * callers own that default). The shared form of the pattern
-    * HITS, k-core and BFS each carried privately.
+    * callers own that default).
     */
   def withMetrics[T](ds: Dataset[T], first: org.apache.spark.sql.Column,
       rest: org.apache.spark.sql.Column*): (Dataset[T], Map[String, Any]) = {
@@ -115,6 +113,7 @@ object Materialize {
     private var rounds = Vector.empty[Set[Int]] // oldest first
     private var held = Set.empty[Int]
     private var cached = List.empty[Dataset[_]]
+    private var sc: Option[org.apache.spark.SparkContext] = None // of the recorded ids
 
     /** Persist an input every round reads; unpersisted by [[close]]. */
     def cache[T](ds: Dataset[T]): Dataset[T] = {
@@ -126,6 +125,7 @@ object Materialize {
     def hold[T](ds: Dataset[T]): Dataset[T] = {
       val ck = Materialize(ds)
       held ++= rddIds(ck)
+      sc = Some(ck.sparkSession.sparkContext)
       ck
     }
 
@@ -143,6 +143,7 @@ object Materialize {
 
     private def record[T](ck: Dataset[T]): Dataset[T] = {
       rounds :+= rddIds(ck)
+      sc = Some(ck.sparkSession.sparkContext)
       if (rounds.size > keep) {
         free(ck.sparkSession.sparkContext, rounds.head, blocking = false)
         rounds = rounds.tail
@@ -155,10 +156,18 @@ object Materialize {
       * `out` reads passes to its caller.
       */
     def close[T](out: Dataset[T]): Dataset[T] = {
-      free(out.sparkSession.sparkContext,
-        (rounds.flatten ++ held).toSet -- rddIds(out), blocking = false)
-      cached.foreach(_.unpersist(blocking = false))
+      release(rddIds(out))
       out
+    }
+
+    /** [[close]] for a loop that returns only driver values: frees
+      * everything.
+      */
+    def close(): Unit = release(Set.empty)
+
+    private def release(kept: Set[Int]): Unit = {
+      sc.foreach(free(_, (rounds.flatten ++ held).toSet -- kept, blocking = false))
+      cached.foreach(_.unpersist(blocking = false))
     }
   }
 

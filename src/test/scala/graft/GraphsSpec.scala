@@ -517,4 +517,17 @@ class GraphsSpec extends SparkSpec {
       "a loop freed the shared edge table")
     Materialize.free(edges, blocking = true)
   }
+
+  test("graph_convergence and graph_fixpoint_delta leave no persisted RDD") {
+    // Both outputs are literal certificate rows; the edge tables the
+    // queries materialize for their loops are theirs to free.
+    val leaks = Seq("graph_convergence", "graph_fixpoint_delta").flatMap { name =>
+      val before = persisted
+      noop(SparkEntry.queries(name)(spark, sfDir))
+      val left = persisted -- before
+      Materialize.free(spark.sparkContext, left, blocking = true)
+      if (left.isEmpty) None else Some(s"$name left ${left.size} RDDs")
+    }
+    assert(leaks.isEmpty, leaks.mkString("; "))
+  }
 }
